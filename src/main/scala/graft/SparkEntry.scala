@@ -139,7 +139,7 @@ object SparkEntry {
   // --------------------------------------------------------------- sources
 
   /** Deterministic per-SF scratch dir for source-format fixtures. */
-  private def fixtureDir(kind: String, dir: String): String =
+  private[graft] def fixtureDir(kind: String, dir: String): String =
     s"/tmp/graft_fixtures/${kind}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   /** S1+K1 (bronze_ingestion.py:23-26): distributed CSV write of nation,
@@ -1459,6 +1459,15 @@ object SparkEntry {
   private def qJdbcSource(s: SparkSession, dir: String): DataFrame = {
     System.setProperty("derby.stream.error.file", "/tmp/derby.log")
     val dbPath = fixtureDir("derby_orders", dir)
+    // a database an earlier call left booted must shut down before its
+    // files go, or the re-create below races the live instance ("No
+    // current connection"); 08006 is Derby's shutdown success, XJ004
+    // "no such database"
+    try java.sql.DriverManager.getConnection(s"jdbc:derby:$dbPath;shutdown=true")
+    catch {
+      case e: java.sql.SQLException
+          if e.getSQLState == "08006" || e.getSQLState == "XJ004" => ()
+    }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dbPath))
     val url = s"jdbc:derby:$dbPath;create=true"
     val props = new java.util.Properties()

@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.TableIO
+import graft.sources.{StagedFiles, TableIO}
 
 /** graft-log: a minimal self-contained commit-log table format over plain
   * parquet — the zero-dependency stand-in for Delta/Iceberg that
@@ -313,24 +313,18 @@ object GraftLog {
     * Returns the staged file names. */
   def stageFiles(df: DataFrame, base: String): Seq[String] = {
     io.mkdirs(base)
-    val scratch = TableIO.join(base, s".stage_${UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(scratch)
     val id = UUID.randomUUID().toString
-    val parts = io.list(scratch)
-      .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .sorted
-    val named = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"$id-$i.parquet"
-      io.move(TableIO.join(scratch, p), TableIO.join(base, name))
+    StagedFiles.publish(TableIO.join(base, s".stage_${UUID.randomUUID()}"))(
+        df.write.mode("overwrite").parquet(_)) { p =>
+      val name = s"$id-${p.index}.parquet"
+      io.move(p.path, TableIO.join(base, name))
       name
     }
-    io.deleteRecursively(scratch)
-    named
   }
 
   /** Stage files AND collect per-file zone maps (min/max) for
     * `statsCols` in ONE extra scan over the staged files (grouped by
-    * `input_file_name`, partition-parallel). Supported stat types:
+    * file, partition-parallel). Supported stat types:
     * integral, floating, string — other types get no stats and are never
     * pruned (conservative). The zone maps ride in the commit JSON, so
     * pruning at read time is a METADATA decision — no file footers are
@@ -341,16 +335,9 @@ object GraftLog {
       : (Seq[String], Map[String, FileStats]) = {
     val named = stageFiles(df, base)
     if (statsCols.isEmpty || named.isEmpty) return (named, Map.empty)
-    val spark = df.sparkSession
-    val aggs = Seq(count(lit(1)).as("__rows")) ++ statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
-        count(col(c)).as(s"__cnt_$c"),
-        approx_count_distinct(col(c)).as(s"__ndv_$c")))
-    val rows = spark.read.parquet(named.map(n => s"$base/$n"): _*)
-      .withColumn("__file", input_file_name())
-      .groupBy(col("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per staged file — metadata-scale
+    val byPath = StagedFiles.perFile(df.sparkSession,
+      named.map(n => TableIO.join(base, n)), statCols = statsCols,
+      ndvCols = statsCols.toSet)
     def toNode(v: Any): Option[JsonNode] = v match {
       case null => None
       case i: Int => Some(mapper.getNodeFactory.numberNode(i.toLong))
@@ -362,21 +349,15 @@ object GraftLog {
       case s: String => Some(mapper.getNodeFactory.textNode(s))
       case _ => None // unsupported type → no stats → never pruned
     }
-    val stats = rows.flatMap { r =>
-      val uri = r.getString(0)
-      named.find(n => uri.endsWith(n)).map { name =>
-        val nRows = r.getAs[Long]("__rows")
-        val cols = statsCols.map { c =>
-          val minMax = for {
-            mn <- toNode(r.getAs[Any](s"__min_$c"))
-            mx <- toNode(r.getAs[Any](s"__max_$c"))
-          } yield (mn, mx)
+    val stats = named.flatMap { name =>
+      byPath.get(TableIO.join(base, name)).map { fa =>
+        name -> statsCols.map { c =>
+          val ca = fa.cols(c)
+          val minMax = for (mn <- toNode(ca.min); mx <- toNode(ca.max))
+            yield (mn, mx)
           // null count + ndv exist even for types min/max can't encode
-          c -> ColStats(minMax,
-            Some(nRows - r.getAs[Long](s"__cnt_$c")),
-            Some(r.getAs[Long](s"__ndv_$c")))
+          c -> ColStats(minMax, Some(fa.rows - ca.nonNull), ca.ndv)
         }.toMap
-        name -> cols
       }
     }.toMap
     (named, stats)

@@ -1048,55 +1048,34 @@ object DeltaInterop {
     io.mkdirs(base)
     val scratch = TableIO.join(base, s".stage_${UUID.randomUUID()}")
     if (partitionBy.isEmpty) {
-      df.write.mode("overwrite").parquet(scratch)
       val id = UUID.randomUUID().toString
-      val parts = io.list(scratch)
-        .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-        .sorted
-      val adds = parts.zipWithIndex.map { case (p, i) =>
-        val name = s"$id-$i.parquet"
-        io.move(TableIO.join(scratch, p), TableIO.join(base, name))
+      StagedFiles.publish(scratch)(df.write.mode("overwrite").parquet(_)) { p =>
+        val name = s"$id-${p.index}.parquet"
+        io.move(p.path, TableIO.join(base, name))
         AddFile(name, Map.empty)
       }
-      io.deleteRecursively(scratch)
-      adds
     } else {
       val toWrite =
         if (config.get("delta.autoOptimize.optimizeWrite").contains("true"))
           df.hint("rebalance", partitionBy.map(col): _*)
         else df
-      toWrite.write.mode("overwrite").partitionBy(partitionBy: _*)
-        .parquet(scratch)
       // hive-style dirs <col>=<val>/part-*.parquet → add actions with
       // explicit partitionValues (the protocol's source of truth; the
       // directory layout is just convention)
-      val adds = mutable.ArrayBuffer.empty[AddFile]
-      def walk(d: String, pv: Map[String, String]): Unit =
-        io.list(d).sorted.foreach { name =>
-          val f = TableIO.join(d, name)
-          if (io.isDirectory(f) && name.contains("=")) {
-            // Spark's partitionBy wrote this dir with Hive-style %XX
-            // escaping — unescape with the same convention (NOT
-            // URLDecoder: '+' is a literal plus in a path)
-            val Array(k, v) = name.split("=", 2)
-            val dec = PathCodec.unescapePathName(v)
-            walk(f, pv + (k -> (if (dec == "__HIVE_DEFAULT_PARTITION__") null else dec)))
-          } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
-            val id = UUID.randomUUID().toString
-            // on-disk layout: Hive-escaped dir names; logged add.path:
-            // the RFC percent-encoding of that on-disk relative path
-            // (the protocol's contract for `path`)
-            val rel = pv.map { case (k, v) =>
-              s"$k=${PathCodec.escapePathName(if (v == null) "__HIVE_DEFAULT_PARTITION__" else v)}"
-            }.mkString("/") + s"/$id.parquet"
-            io.mkdirs(TableIO.join(base, rel.split("/").dropRight(1).mkString("/")))
-            io.move(f, TableIO.join(base, rel))
-            adds += AddFile(PathCodec.percentEncodePath(rel), pv)
-          }
-        }
-      walk(scratch, Map.empty)
-      io.deleteRecursively(scratch)
-      adds.toSeq
+      StagedFiles.publish(scratch)(toWrite.write.mode("overwrite")
+          .partitionBy(partitionBy: _*).parquet(_)) { p =>
+        val pv = Map(p.partition.map { case (k, v) =>
+          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else v) }: _*)
+        // on-disk layout: Hive-escaped dir names; logged add.path: the
+        // RFC percent-encoding of that on-disk relative path (the
+        // protocol's contract for `path`)
+        val rel = pv.map { case (k, v) =>
+          s"$k=${PathCodec.escapePathName(if (v == null) "__HIVE_DEFAULT_PARTITION__" else v)}"
+        }.mkString("/") + s"/${UUID.randomUUID()}.parquet"
+        io.mkdirs(TableIO.join(base, rel.split("/").dropRight(1).mkString("/")))
+        io.move(p.path, TableIO.join(base, rel))
+        AddFile(PathCodec.percentEncodePath(rel), pv)
+      }
     }
   }
 
@@ -1113,24 +1092,10 @@ object DeltaInterop {
                               adds: Seq[AddFile],
                               dataFields: StructType): Seq[AddFile] = {
     if (adds.isEmpty) return adds
-    def orderable(dt: DataType): Boolean = dt match {
-      case _: NumericType | StringType | DateType |
-           TimestampType | TimestampNTZType => true
-      case _ => false
-    }
-    val statCols = dataFields.fields.filter(f => orderable(f.dataType)).toSeq
-    val paths = adds.map(a => resolveDataPath(base, a.path))
-    val aggs = Seq(count(lit(1)).as("__nr")) ++ statCols.zipWithIndex.flatMap {
-      case (f, i) => Seq(
-        min(col(f.name)).as(s"__mn_$i"), max(col(f.name)).as(s"__mx_$i"),
-        sum(col(f.name).isNull.cast("long")).as(s"__nc_$i"))
-    }
-    val byFile = spark.read.schema(dataFields).parquet(paths: _*)
-      .groupBy(regexp_replace(col("_metadata.file_path"),
-        PathCodec.metadataFilePathNormalizeRegex, "/").as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per staged file — metadata-scale
-      .map(r => r.getString(0) -> r).toMap
+    val statCols = dataFields.fields
+      .filter(f => StagedFiles.orderable(f.dataType)).map(_.name).toSeq
+    val byFile = StagedFiles.perFile(spark,
+      adds.map(a => resolveDataPath(base, a.path)), Some(dataFields), statCols)
     // JSON-encode one stat value; false = not representable (omit)
     def put(o: com.fasterxml.jackson.databind.node.ObjectNode,
             name: String, v: Any): Boolean = v match {
@@ -1155,22 +1120,21 @@ object DeltaInterop {
       case _ => false
     }
     adds.map { a =>
-      val key = PathCodec.metadataPathKey(resolveDataFile(base, a.path))
-      byFile.get(key).map { r =>
+      byFile.get(resolveDataPath(base, a.path)).map { fa =>
         val root = mapper.createObjectNode()
-        // row layout: (groupKey, __nr, then [mn, mx, nc] per stat column)
-        root.put("numRecords", r.getLong(1))
+        root.put("numRecords", fa.rows)
         val mnO = mapper.createObjectNode(); val mxO = mapper.createObjectNode()
         val ncO = mapper.createObjectNode()
-        statCols.zipWithIndex.foreach { case (f, i) =>
+        statCols.foreach { c =>
+          val ca = fa.cols(c)
           val probe = mapper.createObjectNode()
           // min and max must land together or not at all — a one-sided
           // bound would make the admit test asymmetric
-          if (put(probe, "mn", r.get(2 + i * 3)) && put(probe, "mx", r.get(3 + i * 3))) {
-            mnO.set[JsonNode](f.name, probe.get("mn"))
-            mxO.set[JsonNode](f.name, probe.get("mx"))
+          if (put(probe, "mn", ca.min) && put(probe, "mx", ca.max)) {
+            mnO.set[JsonNode](c, probe.get("mn"))
+            mxO.set[JsonNode](c, probe.get("mx"))
           }
-          ncO.put(f.name, r.getLong(4 + i * 3))
+          ncO.put(c, fa.rows - ca.nonNull)
         }
         root.set[JsonNode]("minValues", mnO)
         root.set[JsonNode]("maxValues", mxO)
@@ -2082,28 +2046,20 @@ object DeltaInterop {
           .drop("__delta_pos", "__base_rid", "__def_ver")
       }
     val scratch = TableIO.join(base, s".opt_${UUID.randomUUID()}")
-    scan.join(broadcast(binOf.toDF("__delta_file", "__bin")),
-        Seq("__delta_file"))
-      .drop("__delta_file")
-      .repartition(col("__bin"))
-      .write.mode("overwrite").partitionBy("__bin").parquet(scratch)
     val id = UUID.randomUUID().toString
-    val staged = mutable.ArrayBuffer.empty[AddFile]
-    io.list(scratch).filter(_.startsWith("__bin=")).sorted.foreach { d =>
-      val b = PathCodec.unescapePathName(d.stripPrefix("__bin=")).toInt
-      val dir = TableIO.join(scratch, d)
-      io.list(dir)
-        .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-        .sorted.foreach { p =>
-          // same flat layout + explicit partitionValues the old path
-          // produced (directory layout is convention, add.pv is truth)
-          val name = s"$id-${staged.size}.parquet"
-          io.move(TableIO.join(dir, p), TableIO.join(base, name))
-          staged += AddFile(name, bins(b)._1)
-        }
+    val staged = StagedFiles.publish(scratch)(
+      scan.join(broadcast(binOf.toDF("__delta_file", "__bin")),
+          Seq("__delta_file"))
+        .drop("__delta_file")
+        .repartition(col("__bin"))
+        .write.mode("overwrite").partitionBy("__bin").parquet(_)) { p =>
+      // same flat layout + explicit partitionValues the old path
+      // produced (directory layout is convention, add.pv is truth)
+      val name = s"$id-${p.index}.parquet"
+      io.move(p.path, TableIO.join(base, name))
+      AddFile(name, bins(p.partition.head._2.toInt)._1)
     }
-    io.deleteRecursively(scratch)
-    collectAddStats(spark, base, staged.toSeq,
+    collectAddStats(spark, base, staged,
       StructType(snap.schema.fields
         .filterNot(f => snap.partitionColumns.contains(f.name))
         .map(f => f.copy(name = snap.physicalName(f.name))) ++
@@ -4119,22 +4075,14 @@ object DeltaInterop {
       snap.files.map(f => Row(null, null, cpAddRow(base, f), null, null)))
     require(parts >= 1, s"checkpoint parts $parts")
     val scratch = TableIO.join(base, s".cp_${UUID.randomUUID()}")
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), cpSchema)
-      .write.mode("overwrite").parquet(scratch)
-    val staged = io.list(scratch)
-      .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .sorted
-    require(staged.nonEmpty, "checkpoint write produced no part file")
-    if (parts == 1) {
-      io.moveReplace(TableIO.join(scratch, staged.head),
-        TableIO.join(logDir(base), checkpointName(snap.version)))
-    } else {
-      staged.zipWithIndex.foreach { case (f, i) =>
-        io.moveReplace(TableIO.join(scratch, f), TableIO.join(logDir(base),
-          f"${snap.version}%020d.checkpoint.${i + 1}%010d.${staged.length}%010d.parquet"))
-      }
+    val staged = StagedFiles.publish(scratch)(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), cpSchema)
+        .write.mode("overwrite").parquet(_)) { p =>
+      io.moveReplace(p.path, TableIO.join(logDir(base),
+        if (parts == 1) checkpointName(snap.version)
+        else f"${snap.version}%020d.checkpoint.${p.index + 1}%010d.${p.count}%010d.parquet"))
     }
-    io.deleteRecursively(scratch)
+    require(staged.nonEmpty, "checkpoint write produced no part file")
     val lc = mapper.createObjectNode()
     lc.put("version", snap.version); lc.put("size", rows.size.toLong)
     if (parts > 1) lc.put("parts", staged.length)
@@ -4166,20 +4114,16 @@ object DeltaInterop {
     // 1. sidecars: the file actions, parallelized
     val addRows = snap.files.map(f => Row(cpAddRow(base, f)))
     val scratch = TableIO.join(base, s".cp2_${UUID.randomUUID()}")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(addRows, sidecarParts),
-      StructType(Seq(StructField("add", cpAddType))))
-      .write.mode("overwrite").parquet(scratch)
-    val staged = io.list(scratch)
-      .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .sorted
-    require(staged.nonEmpty, "v2 checkpoint wrote no sidecar part")
-    val sidecars = staged.map { f =>
+    val sidecars = StagedFiles.publish(scratch)(
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(addRows, sidecarParts),
+        StructType(Seq(StructField("add", cpAddType))))
+        .write.mode("overwrite").parquet(_)) { p =>
       val name = s"${UUID.randomUUID()}.parquet"
-      io.move(TableIO.join(scratch, f), TableIO.join(sidecarDir, name))
+      io.move(p.path, TableIO.join(sidecarDir, name))
       name
     }
-    io.deleteRecursively(scratch)
+    require(sidecars.nonEmpty, "v2 checkpoint wrote no sidecar part")
     // 2. the UUID-named top level: non-file actions + sidecar refs
     val topSchema = StructType(Seq(
       StructField("protocol", cpProtocolType),
@@ -4207,15 +4151,14 @@ object DeltaInterop {
       sidecars.map(n => Row(null, null, null, null,
         Row(n, io.length(TableIO.join(sidecarDir, n)), 0L))))
     val scratch2 = TableIO.join(base, s".cp2top_${UUID.randomUUID()}")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(topRows, 1), topSchema)
-      .write.mode("overwrite").parquet(scratch2)
-    val top = io.list(scratch2)
-      .find(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("no v2 top-level staged"))
-    io.move(TableIO.join(scratch2, top), TableIO.join(log,
-      f"${snap.version}%020d.checkpoint.${UUID.randomUUID()}.parquet"))
-    io.deleteRecursively(scratch2)
+    val top = StagedFiles.publish(scratch2)(
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(topRows, 1), topSchema)
+        .write.mode("overwrite").parquet(_)) { p =>
+      io.move(p.path, TableIO.join(log,
+        f"${snap.version}%020d.checkpoint.${UUID.randomUUID()}.parquet"))
+    }
+    if (top.isEmpty) throw new IllegalStateException("no v2 top-level staged")
     val lc = mapper.createObjectNode()
     lc.put("version", snap.version)
     lc.put("size", (topRows.size + addRows.size).toLong)

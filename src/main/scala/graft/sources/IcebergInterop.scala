@@ -2094,7 +2094,8 @@ object IcebergInterop {
 
   /** Per-file [min,max] of every orderable column in the spec's binary
     * single-value form, keyed by field id (ids 1..n, matching
-    * schemaNode's assignment), from ONE aggregate scan grouped by file.
+    * schemaNode's assignment), from ONE aggregate scan grouped by file
+    * ([[StagedFiles.perFile]]), keyed by staged path.
     * A bound lands only when BOTH min and max are representable —
     * one-sided bounds would make the admit test asymmetric. */
   private def collectBounds(spark: SparkSession, schema: StructType,
@@ -2107,39 +2108,21 @@ object IcebergInterop {
                               Seq.empty)
       : Map[String, (Long, Map[Int, Array[Byte]], Map[Int, Array[Byte]],
                      Map[String, Any])] = {
-    import org.apache.spark.sql.functions._
-    def orderable(dt: DataType): Boolean = dt match {
-      case _: NumericType | StringType | DateType |
-           TimestampType | TimestampNTZType => true
-      case _ => false
-    }
-    val statCols = schema.fields.zipWithIndex
-      .filter { case (f, _) => orderable(f.dataType) }.toSeq
-    if (staged.isEmpty) return Map.empty
-    val aggs = Seq(count(lit(1)).as("__nr")) ++
-      statCols.flatMap { case (f, _) =>
-        Seq(min(col(f.name)), max(col(f.name))) } ++
-      partVals.map { case (n, c) => first(c, ignoreNulls = false).as(s"__pv_$n") }
-    val pvBase = 2 + statCols.size * 2
-    spark.read.parquet(staged: _*)
-      .groupBy(regexp_replace(col("_metadata.file_path"),
-        PathCodec.metadataFilePathNormalizeRegex, "/").as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per staged file — metadata-scale
-      .map { r =>
-        val lo = Map.newBuilder[Int, Array[Byte]]
-        val hi = Map.newBuilder[Int, Array[Byte]]
-        statCols.zipWithIndex.foreach { case ((f, _), i) =>
-          for (mn <- SingleValue.encode(f.dataType, r.get(2 + i * 2));
-               mx <- SingleValue.encode(f.dataType, r.get(3 + i * 2))) {
-            lo += idOf(f.name).toInt -> mn
-            hi += idOf(f.name).toInt -> mx
-          }
+    val statCols = schema.fields.filter(f => StagedFiles.orderable(f.dataType))
+    StagedFiles.perFile(spark, staged, statCols = statCols.map(_.name).toSeq,
+        extras = partVals).map { case (path, fa) =>
+      val lo = Map.newBuilder[Int, Array[Byte]]
+      val hi = Map.newBuilder[Int, Array[Byte]]
+      statCols.foreach { f =>
+        val ca = fa.cols(f.name)
+        for (mn <- SingleValue.encode(f.dataType, ca.min);
+             mx <- SingleValue.encode(f.dataType, ca.max)) {
+          lo += idOf(f.name).toInt -> mn
+          hi += idOf(f.name).toInt -> mx
         }
-        val pv: Map[String, Any] = partVals.zipWithIndex.map {
-          case ((n, _), i) => n -> r.get(pvBase + i) }.toMap
-        r.getString(0) -> (r.getLong(1), lo.result(), hi.result(), pv)
-      }.toMap
+      }
+      path -> (fa.rows, lo.result(), hi.result(), fa.extras)
+    }
   }
 
   /** Stage a partitioned frame's data files in ONE distributed write:
@@ -2178,24 +2161,19 @@ object IcebergInterop {
     val scratch = TableIO.join(base, s".stage_$idTag")
     val projected = dfIds.select(dfIds.columns.map(col) ++
       derived.zip(gp).map { case ((_, c), g) => c.as(g) }: _*)
-    distributeForWrite(projected, base, gp.map(col))
-      .write.mode("overwrite").partitionBy(gp: _*).parquet(scratch)
-    // walk the partition tree (one level per spec field; null values
-    // land under __HIVE_DEFAULT_PARTITION__) — bounded by #files
-    def walk(dir: String): Seq[String] =
-      io.list(dir).flatMap { n =>
-        val p = TableIO.join(dir, n)
-        if (io.isDirectory(p)) walk(p)
-        else if (n.startsWith("part-") && n.endsWith(".parquet")) Seq(p)
-        else Seq.empty
-      }
-    val staged = walk(scratch).sorted.zipWithIndex.map { case (p, i) =>
-      val dst = TableIO.join(dataDir, s"$idTag-$i.parquet")
-      io.move(p, dst)
-      dst
-    }
-    io.deleteRecursively(scratch)
-    staged
+    // one partition directory level per spec field; null values land
+    // under __HIVE_DEFAULT_PARTITION__
+    StagedFiles.publish(scratch)(distributeForWrite(projected, base, gp.map(col))
+        .write.mode("overwrite").partitionBy(gp: _*).parquet(_))(
+      moveTo(dataDir, idTag))
+  }
+
+  /** The `place` callback that moves staged part `i` to
+    * `dir/<prefix>-i.parquet` and returns that path. */
+  private def moveTo(dir: String, prefix: String)(p: StagedFiles.Part): String = {
+    val dst = TableIO.join(dir, s"$prefix-${p.index}.parquet")
+    io.move(p.path, dst)
+    dst
   }
 
   /** Bounds map → the avro map-as-array branch of the entry schema. */
@@ -2214,6 +2192,18 @@ object IcebergInterop {
     }
     arr
   }
+
+  /** Stage `df` through one writer as `data/<name>`; returns its path. */
+  private def stageOne(df: DataFrame, base: String, scratchName: String,
+                       name: String): String =
+    StagedFiles.publish(TableIO.join(base, scratchName))(
+        df.coalesce(1).write.parquet(_)) { p =>
+      val dataDir = TableIO.join(base, "data"); io.mkdirs(dataDir)
+      val dst = TableIO.join(dataDir, name)
+      io.move(p.path, dst)
+      dst
+    }.headOption.getOrElse(
+      throw new IllegalStateException(s"no part file staged for $name"))
 
   private def writeAvro(f: String, schema: AvroSchema,
                         rows: Seq[GenericRecord]): Unit = {
@@ -2436,21 +2426,11 @@ object IcebergInterop {
     // before staging so the sort and the stamp can't diverge)
     val writeOrderId: Option[Int] = currentWriteOrderId(base, dfIds.columns.toSeq)
     val stagedPaths: Seq[String] =
-      if (partitionBy.isEmpty) {
-        val scratch = TableIO.join(base, s".stage_${UUID.randomUUID()}")
-        distributeForWrite(dfIds, base, Seq.empty)
-          .write.mode("overwrite").parquet(scratch)
-        val parts = io.list(scratch)
-          .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-          .sorted
-        val staged = parts.zipWithIndex.map { case (p, i) =>
-          val name = s"$id-$i.parquet"
-          io.move(TableIO.join(scratch, p), TableIO.join(dataDir, name))
-          TableIO.join(dataDir, name)
-        }
-        io.deleteRecursively(scratch)
-        staged
-      } else stagePartitioned(dfIds, base, dataDir,
+      if (partitionBy.isEmpty)
+        StagedFiles.publish(TableIO.join(base, s".stage_${UUID.randomUUID()}"))(
+          distributeForWrite(dfIds, base, Seq.empty)
+            .write.mode("overwrite").parquet(_))(moveTo(dataDir, id))
+      else stagePartitioned(dfIds, base, dataDir,
         derived.map { case (n, c, _) => (n, c) }, id)
 
     // 2. one new manifest for the added files, each entry carrying
@@ -2462,7 +2442,7 @@ object IcebergInterop {
       collectBounds(spark, df.schema, stagedPaths, idOf,
         derived.map { case (n, c, _) => (n, c) })
     val dataFiles: Seq[(String, Map[String, Any])] = stagedPaths.map { f =>
-      f -> boundsByFile.get(PathCodec.metadataPathKey(f))
+      f -> boundsByFile.get(f)
         .map(_._4).getOrElse(Map.empty[String, Any])
     }
     // ---- publish. Everything below depends on the PREVIOUS metadata
@@ -2513,10 +2493,10 @@ object IcebergInterop {
       // 103) — the filesTable and scan planners read it, so it must be
       // real, from the same one grouped scan that collects bounds
       dfr.put("record_count",
-        boundsByFile.get(PathCodec.metadataPathKey(f)).map(_._1).getOrElse(0L))
+        boundsByFile.get(f).map(_._1).getOrElse(0L))
       dfr.put("file_size_in_bytes", io.length(f))
       writeOrderId.foreach(v => dfr.put("sort_order_id", Int.box(v)))
-      boundsByFile.get(PathCodec.metadataPathKey(f)).foreach { case (_, lo, hi, _) =>
+      boundsByFile.get(f).foreach { case (_, lo, hi, _) =>
         dfr.put("lower_bounds", avroBounds(dfSchema, "lower_bounds", lo))
         dfr.put("upper_bounds", avroBounds(dfSchema, "upper_bounds", hi))
       }
@@ -2820,15 +2800,8 @@ object IcebergInterop {
     val rows = deletes.flatMap { case (p, ps) => ps.distinct.map(pos => (p, pos)) }
       .sorted
     require(rows.nonEmpty, "no positions to delete")
-    val scratch = TableIO.join(base, s".stage_$id")
-    rows.toDF("file_path", "pos").coalesce(1).write.parquet(scratch)
-    val pf = io.list(scratch)
-      .find(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("no delete part file staged"))
-    val dataDir = TableIO.join(base, "data"); io.mkdirs(dataDir)
-    val delFile = TableIO.join(dataDir, s"delete-$id.parquet")
-    io.move(TableIO.join(scratch, pf), delFile)
-    io.deleteRecursively(scratch)
+    val delFile = stageOne(rows.toDF("file_path", "pos"), base,
+      s".stage_$id", s"delete-$id.parquet")
 
     // 2. the delete manifest (a content=1 file entry)
     val entrySchema = entrySchemaFor(Seq.empty)
@@ -2985,19 +2958,11 @@ object IcebergInterop {
       finally matched.unpersist(blocking = false)
     try {
     val parts = math.max(1, math.ceil(n / 4e6).toInt)
-    val scratch = TableIO.join(base, s".stage_$id")
-    matched.repartitionByRange(parts, col("file_path"), col("pos"))
-      .sortWithinPartitions("file_path", "pos") // spec: sorted delete files
-      .write.parquet(scratch)
     val dataDir = TableIO.join(base, "data"); io.mkdirs(dataDir)
-    val delFiles = io.list(scratch)
-      .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .sorted.zipWithIndex.map { case (pf, i) =>
-        val dst = TableIO.join(dataDir, s"delete-$id-$i.parquet")
-        io.move(TableIO.join(scratch, pf), dst)
-        dst
-      }.toSeq
-    io.deleteRecursively(scratch)
+    val delFiles = StagedFiles.publish(TableIO.join(base, s".stage_$id"))(
+      matched.repartitionByRange(parts, col("file_path"), col("pos"))
+        .sortWithinPartitions("file_path", "pos") // spec: sorted delete files
+        .write.parquet(_))(moveTo(dataDir, s"delete-$id"))
     matched.unpersist()
     // per-delete-file record counts: the single-output-file case (the
     // overwhelmingly common one — `parts` only exceeds 1 past 4M
@@ -3005,12 +2970,8 @@ object IcebergInterop {
     // rows landed in the one file. Only a multi-file split pays a
     // post-write grouped scan to attribute rows to files.
     val counts: Map[String, Long] =
-      if (delFiles.size == 1) Map(PathCodec.metadataPathKey(delFiles.head) -> n)
-      else spark.read
-        .parquet(delFiles: _*)
-        .groupBy(regexp_replace(col("_metadata.file_path"),
-          PathCodec.metadataFilePathNormalizeRegex, "/").as("__f"))
-        .count().as[(String, Long)].collect().toMap
+      if (delFiles.size == 1) Map(delFiles.head -> n)
+      else StagedFiles.perFile(spark, delFiles).map { case (f, fa) => f -> fa.rows }
     val entrySchema = entrySchemaFor(Seq.empty)
     val recs = delFiles.map { df =>
       val rec = new GenericData.Record(entrySchema)
@@ -3019,8 +2980,7 @@ object IcebergInterop {
       dfr.put("content", 1) // 1 = position deletes
       dfr.put("file_path", PathCodec.absNorm(df))
       dfr.put("file_format", "PARQUET")
-      dfr.put("record_count",
-        counts.getOrElse(PathCodec.metadataPathKey(df), 0L))
+      dfr.put("record_count", counts.getOrElse(df, 0L))
       dfr.put("file_size_in_bytes", io.length(df))
       rec.put("data_file", dfr)
       rec
@@ -3465,20 +3425,11 @@ object IcebergInterop {
     // Small batches keep the single-file shape (parts = 1).
     val nKeys = nKeysHint.getOrElse(proj.count())
     val parts = math.max(1L, (nKeys + 4000000L - 1L) / 4000000L).toInt
-    val scratch = TableIO.join(base, s".stage_$id")
-    proj.repartition(parts, equalityCols.map(col): _*)
-      .write.parquet(scratch)
-    val pfs = io.list(scratch)
-      .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .sorted
-    require(pfs.nonEmpty, "no delete part file staged")
     val dataDir = TableIO.join(base, "data"); io.mkdirs(dataDir)
-    val delFiles = pfs.zipWithIndex.map { case (pf, i) =>
-      val delFile = TableIO.join(dataDir, s"eqdelete-$id-$i.parquet")
-      io.move(TableIO.join(scratch, pf), delFile)
-      delFile
-    }
-    io.deleteRecursively(scratch)
+    val delFiles = StagedFiles.publish(TableIO.join(base, s".stage_$id"))(
+      proj.repartition(parts, equalityCols.map(col): _*).write.parquet(_))(
+      moveTo(dataDir, s"eqdelete-$id"))
+    require(delFiles.nonEmpty, "no delete part file staged")
 
     // 2. the delete manifest (content=2 file entries with equality_ids)
     val entrySchema = entrySchemaFor(Seq.empty)
@@ -3518,21 +3469,11 @@ object IcebergInterop {
     import org.apache.spark.sql.functions.col
     val writeOrderId: Option[Int] = currentWriteOrderId(base, dfIds.columns.toSeq)
     val stagedPaths: Seq[String] =
-      if (partCols.isEmpty) {
-        val scratch = TableIO.join(base, s".stage_$idTag")
-        distributeForWrite(dfIds, base, Seq.empty)
-          .write.mode("overwrite").parquet(scratch)
-        val parts = io.list(scratch)
-          .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-          .sorted
-        val staged = parts.zipWithIndex.map { case (p, i) =>
-          val dst = TableIO.join(dataDir, s"$idTag-$i.parquet")
-          io.move(TableIO.join(scratch, p), dst)
-          dst
-        }.toSeq
-        io.deleteRecursively(scratch)
-        staged
-      } else stagePartitioned(dfIds, base, dataDir,
+      if (partCols.isEmpty)
+        StagedFiles.publish(TableIO.join(base, s".stage_$idTag"))(
+          distributeForWrite(dfIds, base, Seq.empty)
+            .write.mode("overwrite").parquet(_))(moveTo(dataDir, idTag))
+      else stagePartitioned(dfIds, base, dataDir,
         partCols.map(c => (c, col(c))), idTag)
     val partTypes: Seq[(String, DataType)] =
       partCols.map(c => c -> df.schema(c).dataType)
@@ -3541,7 +3482,7 @@ object IcebergInterop {
       collectBounds(spark, df.schema, stagedPaths, idOf,
         partCols.map(c => (c, col(c))))
     val dataFiles: Seq[(String, Map[String, Any])] = stagedPaths.map { f =>
-      f -> boundsByFile.get(PathCodec.metadataPathKey(f))
+      f -> boundsByFile.get(f)
         .map(_._4).getOrElse(Map.empty[String, Any])
     }
     val entries = dataFiles.map { case (f, pv) =>
@@ -3552,11 +3493,11 @@ object IcebergInterop {
       dfr.put("content", 0)
       dfr.put("file_path", PathCodec.absNorm(f))
       dfr.put("file_format", "PARQUET")
-      dfr.put("record_count", boundsByFile.get(PathCodec.metadataPathKey(f))
+      dfr.put("record_count", boundsByFile.get(f)
         .map(_._1).getOrElse(0L))
       dfr.put("file_size_in_bytes", io.length(f))
       writeOrderId.foreach(v => dfr.put("sort_order_id", Int.box(v)))
-      boundsByFile.get(PathCodec.metadataPathKey(f)).foreach { case (_, lo, hi, _) =>
+      boundsByFile.get(f).foreach { case (_, lo, hi, _) =>
         dfr.put("lower_bounds", avroBounds(dfSchema, "lower_bounds", lo))
         dfr.put("upper_bounds", avroBounds(dfSchema, "upper_bounds", hi))
       }
@@ -4487,15 +4428,12 @@ object IcebergInterop {
                                         retyped: DataFrame,
                                         snapshotId: Long): Long = {
     val metaDir = metadataDir(base)
-    val tmpDir = TableIO.join(metaDir, s".pstats_${UUID.randomUUID()}")
-    retyped.coalesce(1).write.parquet(tmpDir)
-    val part = io.list(tmpDir)
-      .find(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("no stats part file"))
     val statsPath = TableIO.join(metaDir,
       s"partition-stats-$snapshotId-${UUID.randomUUID()}.parquet")
-    io.move(TableIO.join(tmpDir, part), statsPath)
-    io.deleteRecursively(tmpDir)
+    val staged = StagedFiles.publish(
+        TableIO.join(metaDir, s".pstats_${UUID.randomUUID()}"))(
+      retyped.coalesce(1).write.parquet(_))(p => io.move(p.path, statsPath))
+    if (staged.isEmpty) throw new IllegalStateException("no stats part file")
     val meta = readMeta(base)
       .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
     val arr = meta.putArray("partition-statistics")
@@ -5028,24 +4966,12 @@ object IcebergInterop {
           snapshotId, id, "replace")
       }
       val parts = math.max(1, math.ceil(n / 4e6).toInt)
-      val scratch = TableIO.join(base, s".stage_$id")
-      dead.repartitionByRange(parts, col("file_path"), col("pos"))
-        .sortWithinPartitions("file_path", "pos")
-        .write.parquet(scratch)
       val dataDir = TableIO.join(base, "data"); io.mkdirs(dataDir)
-      val delFiles = io.list(scratch)
-        .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-        .sorted.zipWithIndex.map { case (pf, i) =>
-          val dst = TableIO.join(dataDir, s"delete-poseq-$id-$i.parquet")
-          io.move(TableIO.join(scratch, pf), dst)
-          dst
-        }.toSeq
-      io.deleteRecursively(scratch)
-      val counts: Map[String, Long] = spark.read.parquet(delFiles: _*)
-        .groupBy(org.apache.spark.sql.functions.regexp_replace(
-          col("_metadata.file_path"),
-          PathCodec.metadataFilePathNormalizeRegex, "/").as("__f"))
-        .count().as[(String, Long)].collect().toMap
+      val delFiles = StagedFiles.publish(TableIO.join(base, s".stage_$id"))(
+        dead.repartitionByRange(parts, col("file_path"), col("pos"))
+          .sortWithinPartitions("file_path", "pos")
+          .write.parquet(_))(moveTo(dataDir, s"delete-poseq-$id"))
+      val counts = StagedFiles.perFile(spark, delFiles)
       val entrySchema = entrySchemaFor(Seq.empty)
       val recs = delFiles.map { df =>
         val rec = new GenericData.Record(entrySchema)
@@ -5055,8 +4981,7 @@ object IcebergInterop {
         dfr.put("content", 1) // position deletes
         dfr.put("file_path", PathCodec.absNorm(df))
         dfr.put("file_format", "PARQUET")
-        dfr.put("record_count",
-          counts.getOrElse(PathCodec.metadataPathKey(df), 0L))
+        dfr.put("record_count", counts.get(df).map(_.rows).getOrElse(0L))
         dfr.put("file_size_in_bytes", io.length(df))
         rec.put("data_file", dfr)
         rec
@@ -5271,18 +5196,9 @@ object IcebergInterop {
             live.repartitionByRange(filesPerPartition, sortBy.map(col): _*)
               .sortWithinPartitions(sortBy.map(col): _*)
           }
-        val scratch = TableIO.join(base, s".stage_$id-$gi")
-        withFieldIds(shaped, lineageIdOf(schemaIdOf(snap.schema)))
-          .write.mode("overwrite")
-          .parquet(scratch)
-        val staged = io.list(scratch)
-          .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-          .sorted.zipWithIndex.map { case (p, i) =>
-            val dst = TableIO.join(dataDir, s"$id-$gi-$i.parquet")
-            io.move(TableIO.join(scratch, p), dst)
-            dst
-          }.toSeq
-        io.deleteRecursively(scratch)
+        val staged = StagedFiles.publish(TableIO.join(base, s".stage_$id-$gi"))(
+          withFieldIds(shaped, lineageIdOf(schemaIdOf(snap.schema)))
+            .write.mode("overwrite").parquet(_))(moveTo(dataDir, s"$id-$gi"))
         val boundsByFile =
           collectBounds(spark, snap.schema, staged, schemaIdOf(snap.schema))
         staged.foreach { f =>
@@ -5293,11 +5209,11 @@ object IcebergInterop {
           dfr.put("content", 0)
           dfr.put("file_path", PathCodec.absNorm(f))
           dfr.put("file_format", "PARQUET")
-          dfr.put("record_count", boundsByFile.get(PathCodec.metadataPathKey(f))
+          dfr.put("record_count", boundsByFile.get(f)
             .map(_._1).getOrElse(0L))
           dfr.put("file_size_in_bytes", io.length(f))
           stampOid.foreach(v => dfr.put("sort_order_id", Int.box(v)))
-          boundsByFile.get(PathCodec.metadataPathKey(f)).foreach { case (_, lo, hi, _) =>
+          boundsByFile.get(f).foreach { case (_, lo, hi, _) =>
             dfr.put("lower_bounds", avroBounds(dfSchema, "lower_bounds", lo))
             dfr.put("upper_bounds", avroBounds(dfSchema, "upper_bounds", hi))
           }
@@ -5606,16 +5522,8 @@ object IcebergInterop {
     import spark.implicits._
     val rows = positionDeletes.flatMap { case (p, ps) =>
       ps.distinct.map(pos => (p, pos)) }.sorted
-    val scratch = TableIO.join(base, s".stage_conv_$id")
-    rows.toDF("file_path", "pos").coalesce(1).write.parquet(scratch)
-    val pf = io.list(scratch)
-      .find(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        "no delete part file staged during convert"))
-    val dataDir = TableIO.join(base, "data"); io.mkdirs(dataDir)
-    val delFile = TableIO.join(dataDir, s"delete-conv-$id.parquet")
-    io.move(TableIO.join(scratch, pf), delFile)
-    io.deleteRecursively(scratch)
+    val delFile = stageOne(rows.toDF("file_path", "pos"), base,
+      s".stage_conv_$id", s"delete-conv-$id.parquet")
     val delSchema = entrySchemaFor(Seq.empty)
     val rec = new GenericData.Record(delSchema)
     rec.put("status", 1); rec.put("snapshot_id", snapshotId)

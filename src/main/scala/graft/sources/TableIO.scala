@@ -3,9 +3,13 @@ package graft.sources
 /** The storage seam under the table-format layer (graft-log / Delta /
   * Iceberg interop and their streams).
   *
-  * The format engines need exactly these primitives — everything else
-  * (data-file scans, parquet staging) already goes through Spark and is
-  * store-agnostic. Keeping the primitives behind one interface means
+  * The format engines need exactly these primitives. Data-file scans go
+  * through Spark. Data-file writes go through [[StagedFiles.publish]]:
+  * Spark writes parquet parts into a scratch directory under the table,
+  * each format's `place` callback names every part and publishes it
+  * with `move` (data files, sidecars), `moveReplace` (checkpoint parts)
+  * or `mirror` (feed mirrors), and the scratch directory is deleted on
+  * every exit path. Keeping the primitives behind one interface means
   * the commit protocols are written ONCE and the deployment picks the
   * store:
   *

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{IcebergInterop, TableIO}
+import graft.sources.{IcebergInterop, StagedFiles, TableIO}
 
 /** Streaming SOURCE over an Iceberg table — the third leg of the
   * streaming-source triangle (graft-log: `GraftLogStream`, Delta CDF:
@@ -195,27 +195,14 @@ object IcebergStream {
         val parts = plain.repartition(nParts, plain.columns.map(col): _*)
         val scratch = TableIO.join(feedDir,
           s".stage_${java.util.UUID.randomUUID()}")
-        parts.write.parquet(scratch)
-        val staged = io.list(scratch)
-          .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-          .sorted
-        staged.zipWithIndex.reverse.foreach { case (p, i) =>
-          io.mirror(TableIO.join(scratch, p),
-            TableIO.join(feedDir, s"chg-$sid-p$i.parquet"))
-        }
+        def mirror(p: StagedFiles.Part): Unit =
+          io.mirror(p.path, TableIO.join(feedDir, s"chg-$sid-p${p.index}.parquet"))
+        val staged = StagedFiles.publish(scratch)(parts.write.parquet(_))(mirror)
         // empty slices (replace snapshots emit nothing; empty parts
         // write no file) still need the p0 sentinel for the fast path
-        if (staged.isEmpty) {
-          val empty = TableIO.join(scratch, "empty")
-          plain.limit(0).coalesce(1).write.mode("overwrite")
-            .parquet(empty)
-          val p = io.list(empty)
-            .find(f => f.startsWith("part-") && f.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException("no empty part staged"))
-          io.mirror(TableIO.join(empty, p),
-            TableIO.join(feedDir, s"chg-$sid-p0.parquet"))
-        }
-        io.deleteRecursively(scratch)
+        if (staged.isEmpty)
+          StagedFiles.publish(scratch)(plain.limit(0).coalesce(1).write
+            .mode("overwrite").parquet(_))(mirror)
       }
     }
     val head = fresh.last
