@@ -12,9 +12,10 @@ package graft.ops
   * group / description / scheduler-pool live in SparkContext local
   * properties backed by an InheritableThreadLocal, so threads spawned
   * here inherit them — Bench's runCapped group cancellation still
-  * reaches every job these thunks submit. Failures propagate: the
-  * first thunk exception rethrows to the caller (after all complete),
-  * matching sequential semantics. */
+  * reaches every job these thunks submit. Failures propagate as they
+  * would sequentially, but only once EVERY leg has finished — a leg may
+  * be mid-commit, so none is interrupted: the first failure in
+  * submission order is rethrown, the others ride along as suppressed. */
 object Par {
   def run[T](thunks: Seq[() => T], maxThreads: Int = 4): Seq[T] = {
     if (thunks.size <= 1) return thunks.map(_())
@@ -28,13 +29,20 @@ object Par {
       }
       // .get() in submission order: deterministic result order, and an
       // ExecutionException surfaces the leg's own failure
-      futs.map { f =>
-        try f.get()
+      val outcomes = futs.map { f =>
+        try Right(f.get())
         catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+          case e: java.util.concurrent.ExecutionException => Left(e.getCause)
         }
       }
+      outcomes.collect { case Left(e) => e } match {
+        case first +: rest =>
+          rest.filter(_ ne first).foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.collect { case Right(v) => v }
+      }
+      // every leg has finished unless the CALLER was interrupted while
+      // waiting; only then does this interrupt the legs still running
     } finally pool.shutdownNow()
   }
 }

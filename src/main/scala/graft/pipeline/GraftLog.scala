@@ -235,12 +235,7 @@ object GraftLog {
     io.mkdirs(logDir(base))
     var attempt = 0
     while (true) {
-      txnId.foreach { id =>
-        commits(base).find(_.txnId.contains(id)) match {
-          case Some(c) => return c.version
-          case None => ()
-        }
-      }
+      replayedVersion(base, txnId).foreach(v => return v)
       val head = currentVersion(base).getOrElse(0L)
       expectedVersion.foreach { ev =>
         if (head != ev)
@@ -286,6 +281,13 @@ object GraftLog {
     }
     -1L // unreachable
   }
+
+  /** The version a `txnId` already committed as, if any — the replay
+    * check that makes a retried idempotent write a no-op. */
+  private def replayedVersion(base: String,
+                              txnId: Option[String]): Option[Long] =
+    txnId.flatMap(id => commits(base).find(_.txnId.contains(id)))
+      .map(_.version)
 
   /** One serializer for per-file stats (commit AND vacuum checkpoint —
     * a squash must not drop fields the incremental commits carried). */
@@ -410,37 +412,29 @@ object GraftLog {
   def append(df: DataFrame, base: String,
              txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.types.StructType
-    txnId.foreach { id =>
-      // cheap pre-check: skip even the staging write on a known replay
-      commits(base).find(_.txnId.contains(id)).foreach(c => return c.version)
-    }
-    val staged = stageFiles(df, base) // immutable; safe to reuse across retries
-    var attempt = 0
-    while (true) {
-      // Schema-evolution race guard: the evolved schema is computed against
-      // the head read HERE. A plain same-schema append has no read
-      // dependency and commits blind (slot races retry inside `commit`);
-      // but when this append CHANGES the log schema, two concurrent
-      // evolvers would latest-wins-drop each other's new column — so an
-      // evolving append carries expectedVersion, and the loser recomputes
-      // the merge against the new head and retries.
-      val head = currentVersion(base).getOrElse(0L)
-      val prevJson = if (head > 0) snapshot(base).schemaJson else None
-      val schema = evolvedSchema(
-        prevJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType]), df)
-      val evolves = !prevJson.contains(schema.json)
-      try {
-        return commit(base, "append", staged, Seq.empty, txnId = txnId,
+    // cheap pre-check: skip even the staging write on a known replay
+    replayedVersion(base, txnId).getOrElse {
+      val staged = stageFiles(df, base) // immutable; reused across retries
+      TableIO.retryOnConflict(TableIO.RebaseRetries) { _ =>
+        // Schema-evolution race guard: the evolved schema is computed
+        // against the head read HERE. A plain same-schema append has no
+        // read dependency and commits blind (slot races retry inside
+        // `commit`); but when this append CHANGES the log schema, two
+        // concurrent evolvers would latest-wins-drop each other's new
+        // column — so an evolving append carries expectedVersion, and
+        // the loser recomputes the merge against the new head and
+        // retries.
+        val head = currentVersion(base).getOrElse(0L)
+        val prevJson = if (head > 0) snapshot(base).schemaJson else None
+        val schema = evolvedSchema(
+          prevJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+            .asInstanceOf[StructType]), df)
+        val evolves = !prevJson.contains(schema.json)
+        commit(base, "append", staged, Seq.empty, txnId = txnId,
           schemaJson = Some(schema.json),
           expectedVersion = if (evolves) Some(head) else None)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 10) throw e
       }
     }
-    -1L // unreachable
   }
 
   /** Schema evolution without data: ADD COLUMN(s) as ONE metadata-only
@@ -455,8 +449,7 @@ object GraftLog {
   def addColumns(base: String,
                  cols: org.apache.spark.sql.types.StructType): Long = {
     import org.apache.spark.sql.types.{DataType, StructType}
-    var attempt = 0
-    while (true) {
+    TableIO.retryOnConflict(TableIO.RebaseRetries) { _ =>
       val head = currentVersion(base).getOrElse(throw
         new IllegalArgumentException(s"no graft-log table at $base"))
       val prev = snapshot(base).schemaJson.map(j =>
@@ -467,16 +460,9 @@ object GraftLog {
         s"column '$n' already exists in $base"))
       val widened = StructType(prev.fields ++
         cols.fields.map(_.copy(nullable = true)))
-      try {
-        return commit(base, "addColumns", Seq.empty, Seq.empty,
-          schemaJson = Some(widened.json), expectedVersion = Some(head))
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 10) throw e
-      }
+      commit(base, "addColumns", Seq.empty, Seq.empty,
+        schemaJson = Some(widened.json), expectedVersion = Some(head))
     }
-    -1L // unreachable
   }
 
   /** Schema evolution by REWRITE — the graft-log RENAME/DROP COLUMN
@@ -596,28 +582,17 @@ object GraftLog {
     * subset and carries the snapshot's version as its read dependency
     * (a concurrent commit conflicts instead of tearing). */
   def upsertScoped(spark: SparkSession, base: String, updates0: DataFrame,
-                   key: String, txnId: Option[String] = None,
-                   maxConflictRetries: Int = 5): Long = {
-    txnId.foreach { id =>
-      // replay of an already-committed merge: answer from the log,
-      // touch nothing (the idempotence streaming sinks build on)
-      commits(base).find(_.txnId.contains(id)).foreach(c => return c.version)
-    }
-    var attempt = 0
-    while (true) {
-      try return upsertScopedOnce(spark, base, updates0, key, txnId)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // a commit landed between our snapshot and our commit: the
-          // whole prune+merge was computed against a stale file set —
-          // recompute from the new head (staged orphans are swept by
-          // vacuum, same as any torn writer)
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
-    }
-    -1L // unreachable
-  }
+                   key: String, txnId: Option[String] = None): Long =
+    // replay of an already-committed merge: answer from the log, touch
+    // nothing (the idempotence streaming sinks build on). A commit that
+    // lands between our snapshot and our commit leaves the whole
+    // prune+merge computed against a stale file set — recompute from
+    // the new head (staged orphans are swept by vacuum, same as any
+    // torn writer).
+    replayedVersion(base, txnId).getOrElse(
+      TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+        upsertScopedOnce(spark, base, updates0, key, txnId)
+      })
 
   private def upsertScopedOnce(spark: SparkSession, base: String,
                                updates0: DataFrame, key: String,
@@ -1148,22 +1123,11 @@ object GraftLog {
     * matching nothing returns the current version without committing. */
   def delete(spark: SparkSession, base: String, predicate: Column,
              scope: Option[(String, Any, Any)] = None,
-             txnId: Option[String] = None,
-             maxConflictRetries: Int = 5): Long = {
-    txnId.foreach { id =>
-      commits(base).find(_.txnId.contains(id)).foreach(c => return c.version)
-    }
-    var attempt = 0
-    while (true) {
-      try return deleteOnce(spark, base, predicate, scope, txnId)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
-    }
-    -1L // unreachable
-  }
+             txnId: Option[String] = None): Long =
+    replayedVersion(base, txnId).getOrElse(
+      TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+        deleteOnce(spark, base, predicate, scope, txnId)
+      })
 
   private def deleteOnce(spark: SparkSession, base: String, predicate: Column,
                          scope: Option[(String, Any, Any)],
@@ -1219,20 +1183,11 @@ object GraftLog {
     * a clustered table. Same contract as `delete`: NULL predicate
     * rows don't match, OCC conflict+retry, no-op short-circuit. */
   def updateWhere(spark: SparkSession, base: String, predicate: Column,
-                  set: Map[String, Column],
-                  maxConflictRetries: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      try return updateOnce(spark, base, autoScope(_, predicate),
+                  set: Map[String, Column]): Long =
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+      updateOnce(spark, base, autoScope(_, predicate),
         _.withColumn("__upd", coalesce(predicate, lit(false))), set)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
     }
-    -1L // unreachable
-  }
 
   /** UPDATE whose row selection is MEMBERSHIP of `key` in `sourceKeys`
     * — the lowering for `UPDATE t SET ... WHERE k [NOT] IN (SELECT
@@ -1248,7 +1203,6 @@ object GraftLog {
                      sourceKeys: DataFrame, key: String,
                      set: Map[String, Column], negated: Boolean = false,
                      extra: Option[Column] = None,
-                     maxConflictRetries: Int = 5,
                      // NOT EXISTS semantics: a NULL target key has no
                      // match, so NOT EXISTS is TRUE and the row updates
                      // (NOT IN leaves it — UNKNOWN); flip per statement
@@ -1278,16 +1232,9 @@ object GraftLog {
               .getOrElse(ranged)
           }
         }
-      var attempt = 0
-      while (true) {
-        try return updateOnce(spark, base, scope, mark, set)
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt > maxConflictRetries) throw e
-        }
+      TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+        updateOnce(spark, base, scope, mark, set)
       }
-      -1L // unreachable
     } finally flag.unpersist()
   }
 
@@ -1364,33 +1311,16 @@ object GraftLog {
     * idempotence, OCC conflict+retry, no-op short-circuit. */
   def deleteVectored(spark: SparkSession, base: String, predicate: Column,
                      scope: Option[(String, Any, Any)] = None,
-                     txnId: Option[String] = None,
-                     maxConflictRetries: Int = 5): Long = {
-    txnId.foreach { id =>
-      commits(base).find(_.txnId.contains(id)).foreach(c => return c.version)
-    }
-    var attempt = 0
-    while (true) {
-      try return deleteVectoredOnce(spark, base, predicate, scope, txnId)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
-    }
-    -1L // unreachable
-  }
-
-  private def deleteVectoredOnce(spark: SparkSession, base: String,
-                                 predicate: Column,
-                                 scope: Option[(String, Any, Any)],
-                                 txnId: Option[String]): Long =
-    deleteVectoredClassified(spark, base,
-      scope match {
-        case Some((c, lo, hi)) => snap => candidatesIn(snap, c, lo, hi)
-        case None => autoScope(_, predicate) // zone maps, no hint needed
-      },
-      _.filter(coalesce(predicate, lit(false))), txnId)
+                     txnId: Option[String] = None): Long =
+    replayedVersion(base, txnId).getOrElse(
+      TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+        deleteVectoredClassified(spark, base,
+          scope match {
+            case Some((c, lo, hi)) => snap => candidatesIn(snap, c, lo, hi)
+            case None => autoScope(_, predicate) // zone maps, no hint needed
+          },
+          _.filter(coalesce(predicate, lit(false))), txnId)
+      })
 
   /** Semi/anti-join vectored DELETE: rows whose `key` appears (IN) or
     * does not appear (NOT IN) in `sourceKeys` get deletion vectors —
@@ -1403,8 +1333,7 @@ object GraftLog {
     * them). The IN form scopes the census by the subquery's [min,max]
     * key range through the same zone maps the scalar path uses. */
   def deleteVectoredInSource(spark: SparkSession, base: String,
-                             sourceKeys: DataFrame, key: String,
-                             maxConflictRetries: Int = 5): Long = {
+                             sourceKeys: DataFrame, key: String): Long = {
     val src = sourceKeys.select(col(key)).distinct().persist()
     try {
       val scope = (snap: Snapshot) => {
@@ -1412,24 +1341,16 @@ object GraftLog {
         if (mm.isNullAt(0)) Seq.empty[String] // empty/all-NULL subquery
         else candidatesIn(snap, key, mm.get(0), mm.get(1))
       }
-      var attempt = 0
-      while (true) {
-        try return deleteVectoredClassified(spark, base, scope,
+      TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+        deleteVectoredClassified(spark, base, scope,
           _.join(src, Seq(key), "left_semi"), None)
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt > maxConflictRetries) throw e
-        }
       }
-      -1L // unreachable
     } finally src.unpersist()
   }
 
   def deleteVectoredNotInSource(spark: SparkSession, base: String,
                                 sourceKeys: DataFrame, key: String,
-                                keepNullKeys: Boolean = false,
-                                maxConflictRetries: Int = 5): Long = {
+                                keepNullKeys: Boolean = false): Long = {
     val src = sourceKeys.select(col(key)).distinct().persist()
     try {
       val classify = (scan: DataFrame) => {
@@ -1437,17 +1358,9 @@ object GraftLog {
                    else scan
         cand.join(src, Seq(key), "left_anti")
       }
-      var attempt = 0
-      while (true) {
-        try return deleteVectoredClassified(spark, base, _.files,
-          classify, None)
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt > maxConflictRetries) throw e
-        }
+      TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+        deleteVectoredClassified(spark, base, _.files, classify, None)
       }
-      -1L // unreachable
     } finally src.unpersist()
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.sources.TableIO
+
 /** Incrementally-maintained materialized aggregate view over a graft-log
   * table — the CONSUMER side of the change feed (Delta's "incremental ETL
   * with CDF" pattern; the reference's gold tables recompute from silver on
@@ -58,22 +60,15 @@ object IncrementalView {
     * view now reflects. No-op (no commit) when already current. */
   def refreshAggregate(spark: SparkSession, basePath: String,
                        viewPath: String, keys: Seq[String],
-                       sumCols: Seq[String], maxRetries: Int = 5): Long = {
+                       sumCols: Seq[String]): Long = {
     require(keys.nonEmpty, "incremental view needs at least one group key")
     val baseHead = GraftLog.currentVersion(basePath).getOrElse(
       throw new IllegalArgumentException(s"no graft-log table at $basePath"))
-    var attempt = 0
-    while (true) {
-      try return refreshOnce(spark, basePath, viewPath, keys, sumCols, baseHead)
-      catch {
-        // a concurrent refresh moved the view head between our read and
-        // commit — recompute against the new state and try again
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+    // a concurrent refresh that moves the view head between our read and
+    // commit makes us recompute against the new state and try again
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+      refreshOnce(spark, basePath, viewPath, keys, sumCols, baseHead)
     }
-    -1L // unreachable
   }
 
   private def refreshOnce(spark: SparkSession, basePath: String,

@@ -210,19 +210,12 @@ object DeltaDml {
     * Version-collision retries re-derive everything from the fresh
     * snapshot, so a lost race never deletes against stale coordinates. */
   def deleteVectoredWhere(spark: SparkSession, base: String,
-                          predicate: Column,
-                          maxConflictRetries: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      try return deleteVectoredWhereOnce(spark, base, predicate)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
+                          predicate: Column): Long =
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+      deleteVectoredOnce(spark, base,
+        _.filter(coalesce(predicate, lit(false))),
+        scanFiles = scopedFiles(_, predicate))
     }
-    -1L // unreachable
-  }
 
   /** Files the predicate can possibly match, by their `add.stats`
     * [min, max] — the DML classification-scan scope. A predicate
@@ -243,12 +236,6 @@ object DeltaDml {
     })
   }
 
-  private def deleteVectoredWhereOnce(spark: SparkSession, base: String,
-                                      predicate: Column): Long =
-    deleteVectoredOnce(spark, base,
-      _.filter(coalesce(predicate, lit(false))),
-      scanFiles = scopedFiles(_, predicate))
-
   /** DV-delete every target row whose `keys` tuple does NOT appear in
     * `sourceKeys` — the `WHEN NOT MATCHED BY SOURCE THEN DELETE`
     * retention idiom ("keep only rows still in the allowlist"), which
@@ -262,29 +249,20 @@ object DeltaDml {
     * UNKNOWN and the row survives. The SQL front-end passes true. */
   def deleteVectoredNotInSource(spark: SparkSession, base: String,
                                 sourceKeys: DataFrame, keys: Seq[String],
-                                maxConflictRetries: Int = 5,
                                 keepNullKeys: Boolean = false): Long = {
     require(keys.nonEmpty, "retention delete needs >=1 key column")
     keys.foreach(k => require(sourceKeys.columns.contains(k),
       s"source frame lacks key column '$k'"))
-    var attempt = 0
-    while (true) {
-      try return deleteVectoredOnce(spark, base,
-        { scan =>
-          val candidates =
-            if (keepNullKeys)
-              scan.filter(keys.map(k => col(k).isNotNull).reduce(_ && _))
-            else scan
-          candidates.join(sourceKeys.select(keys.map(col): _*).distinct(),
-            keys, "left_anti")
-        })
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+      deleteVectoredOnce(spark, base, { scan =>
+        val candidates =
+          if (keepNullKeys)
+            scan.filter(keys.map(k => col(k).isNotNull).reduce(_ && _))
+          else scan
+        candidates.join(sourceKeys.select(keys.map(col): _*).distinct(),
+          keys, "left_anti")
+      })
     }
-    -1L // unreachable
   }
 
   /** Semi-join vectored DELETE: rows whose `keys` appear in
@@ -294,23 +272,15 @@ object DeltaDml {
     * subquery may be billions of keys at 100 TB). The dual of
     * `deleteVectoredNotInSource`. */
   def deleteVectoredInSource(spark: SparkSession, base: String,
-                             sourceKeys: DataFrame, keys: Seq[String],
-                             maxConflictRetries: Int = 5): Long = {
+                             sourceKeys: DataFrame, keys: Seq[String]): Long = {
     require(keys.nonEmpty, "in-source delete needs >=1 key column")
     keys.foreach(k => require(sourceKeys.columns.contains(k),
       s"source frame lacks key column '$k'"))
-    var attempt = 0
-    while (true) {
-      try return deleteVectoredOnce(spark, base,
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+      deleteVectoredOnce(spark, base,
         _.join(sourceKeys.select(keys.map(col): _*).distinct(),
           keys, "left_semi"))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
     }
-    -1L // unreachable
   }
 
   /** Shared vectored-delete body: `classify` maps the coordinate-
@@ -423,20 +393,11 @@ object DeltaDml {
     * contract delta-spark's UPDATE writes. Partition columns cannot be
     * updated (that is a MERGE/rewrite, not an in-place update). */
   def updateWhere(spark: SparkSession, base: String, predicate: Column,
-                  set: Map[String, Column],
-                  maxConflictRetries: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      try return updateMarkedOnce(spark, base, scopedFiles(_, predicate),
+                  set: Map[String, Column]): Long =
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+      updateMarkedOnce(spark, base, scopedFiles(_, predicate),
         _.withColumn("__upd", coalesce(predicate, lit(false))), set)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
     }
-    -1L // unreachable
-  }
 
   /** UPDATE whose row selection is MEMBERSHIP of `key` in `sourceKeys`
     * — the lowering for `UPDATE t SET ... WHERE k [NOT] IN (SELECT
@@ -450,7 +411,6 @@ object DeltaDml {
                      sourceKeys: DataFrame, key: String,
                      set: Map[String, Column], negated: Boolean = false,
                      extra: Option[Column] = None,
-                     maxConflictRetries: Int = 5,
                      // NOT EXISTS semantics: a NULL target key has no
                      // match, so NOT EXISTS is TRUE and the row updates
                      // (NOT IN leaves it — UNKNOWN); flip per statement
@@ -480,16 +440,9 @@ object DeltaDml {
             scopedFiles(snap, extra.map(ranged && _).getOrElse(ranged))
           }
         }
-      var attempt = 0
-      while (true) {
-        try return updateMarkedOnce(spark, base, scope, mark, set)
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt > maxConflictRetries) throw e
-        }
+      TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+        updateMarkedOnce(spark, base, scope, mark, set)
       }
-      -1L // unreachable
     } finally flag.unpersist()
   }
 
@@ -687,8 +640,8 @@ object DeltaDml {
     * parseable stats are conservatively rewritten. CDF-enabled tables
     * get update_preimage/update_postimage/insert change rows. */
   def mergeUpsert(spark: SparkSession, base: String, updates0: DataFrame,
-                  key: String, maxConflictRetries: Int = 5): Long =
-    mergeUpsertKeys(spark, base, updates0, Seq(key), maxConflictRetries)
+                  key: String): Long =
+    mergeUpsertKeys(spark, base, updates0, Seq(key))
 
   /** Composite-key MERGE: exact matching on ALL `keys`; file skipping
     * stays driven by `keys.head`'s add.stats range (files whose head-key
@@ -705,7 +658,7 @@ object DeltaDml {
     * a typo'd source column silently widening the table is the classic
     * autoMerge hazard. */
   def mergeUpsertKeys(spark: SparkSession, base: String, updates0: DataFrame,
-                      keys: Seq[String], maxConflictRetries: Int = 5,
+                      keys: Seq[String],
                       evolveSchema: Boolean = false): Long = {
     if (evolveSchema) {
       val have = snapshot(spark, base).schema.fieldNames.toSet
@@ -715,16 +668,9 @@ object DeltaDml {
           org.apache.spark.sql.types.StructType(
             extra.map(_.copy(nullable = true))))
     }
-    var attempt = 0
-    while (true) {
-      try return mergeUpsertOnce(spark, base, updates0, keys)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxConflictRetries) throw e
-      }
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { _ =>
+      mergeUpsertOnce(spark, base, updates0, keys)
     }
-    -1L // unreachable
   }
 
   private def mergeUpsertOnce(spark: SparkSession, base: String,

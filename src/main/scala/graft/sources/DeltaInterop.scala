@@ -1606,18 +1606,10 @@ object DeltaInterop {
           "assigns it; omit it from the append frame")
         if (!df0.columns.contains(name)) {
           // id assignment reads the high-water mark: conflicts recompute
-          var attempt = 0
-          var s = snap
-          while (true) {
-            try return appendWithIdentity(s, df0, base, partitionBy,
-              name, start, step,
+          return TableIO.retryOnConflict(TableIO.RederiveRetries) { i =>
+            val s = if (i == 0) snap else snapshot(df0.sparkSession, base)
+            appendWithIdentity(s, df0, base, partitionBy, name, start, step,
               identityColumnOf(s.schema).get._4)
-            catch {
-              case e: java.util.ConcurrentModificationException =>
-                attempt += 1
-                if (attempt > 5) throw e
-                s = snapshot(df0.sparkSession, base)
-            }
           }
         }
     }
@@ -1720,8 +1712,24 @@ object DeltaInterop {
                                snap0: DeltaSnapshot,
                                adds: Seq[AddFile]): Long = {
     var s = snap0
-    var attempt = 0
-    while (true) {
+    TableIO.retryOnConflict(TableIO.RebaseRetries, onLoss = { _ =>
+      // Mirror commitReconciled's winner inspection: the staged files
+      // were conformed against the snapshot's metaData (column-mapping
+      // physical names, constraints, protocol), so a winning commit
+      // that changed either invalidates them — republishing e.g.
+      // logical-named parquet into a now physically-named table would
+      // read back as silent NULLs.
+      winningActions(base, s.version + 1)._2.foreach { case (wv, n) =>
+        if (n.has("metaData") || n.has("protocol"))
+          throw new java.util.ConcurrentModificationException(
+            s"concurrent commit $wv of $base changed table " +
+            "metadata/protocol — refusing to rebase a row-tracked " +
+            "append staged against the old definition")
+      }
+      s = snapshot(spark, base)
+      require(s.rowTrackingEnabled,
+        s"row tracking was disabled concurrently on $base — refusing")
+    }) { _ =>
       val v = s.version + 1
       var next = s.rowIdHighWaterMark + 1
       val withIds = adds.map { a =>
@@ -1731,42 +1739,25 @@ object DeltaInterop {
         next += n
         r
       }
-      val lines = withIds.map(addJson(_, base)) :+
-        rowTrackingDomainJson(next - 1)
-      try {
-        writeCommit(base, v, lines, "WRITE")
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 10) throw e
-          // Mirror commitReconciled's winner inspection: the staged
-          // files were conformed against the snapshot's metaData
-          // (column-mapping physical names, constraints, protocol), so
-          // a winning commit that changed either invalidates them —
-          // republishing e.g. logical-named parquet into a now
-          // physically-named table would read back as silent NULLs.
-          val head = currentVersion(base).getOrElse(
-            throw new IllegalStateException(s"no commits under $base"))
-          (v to head).foreach { wv =>
-            val wf = TableIO.join(logDir(base), commitName(wv))
-            if (io.exists(wf)) io.readLines(wf).foreach { line =>
-              if (line.nonEmpty) {
-                val n = mapper.readTree(line)
-                if (n.has("metaData") || n.has("protocol"))
-                  throw new java.util.ConcurrentModificationException(
-                    s"concurrent commit $wv of $base changed table " +
-                    "metadata/protocol — refusing to rebase a row-tracked " +
-                    "append staged against the old definition")
-              }
-            }
-          }
-          s = snapshot(spark, base)
-          require(s.rowTrackingEnabled,
-            s"row tracking was disabled concurrently on $base — refusing")
-      }
+      writeCommit(base, v, withIds.map(addJson(_, base)) :+
+        rowTrackingDomainJson(next - 1), "WRITE")
+      v
     }
-    -1L // unreachable
+  }
+
+  /** The log head, and every action of the commits that won versions
+    * `from`..head, read lazily: what a losing committer inspects before
+    * it rebases (a refusal stops the reads at the offending commit). */
+  private def winningActions(base: String,
+                             from: Long): (Long, Iterator[(Long, JsonNode)]) = {
+    val head = currentVersion(base).getOrElse(
+      throw new IllegalStateException(s"no commits under $base"))
+    (head, (from to head).iterator.flatMap { wv =>
+      val wf = TableIO.join(logDir(base), commitName(wv))
+      if (!io.exists(wf)) Iterator.empty
+      else io.readLines(wf).iterator.filter(_.nonEmpty)
+        .map(line => wv -> mapper.readTree(line))
+    })
   }
 
   /** Read with the row-tracking columns `_row_id` and
@@ -1828,48 +1819,30 @@ object DeltaInterop {
     * conflicts with metadata changes. Driver-side log reads only. */
   private[sources] def commitReconciled(base: String, expectedVersion: Long,
                                         lines: Seq[String], operation: String,
-                                        removedPaths: Set[String],
-                                        maxRetries: Int = 10): Long = {
+                                        removedPaths: Set[String]): Long = {
     var v = expectedVersion
-    var attempt = 0
-    while (true) {
-      try {
-        writeCommit(base, v, lines, operation)
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          val head = currentVersion(base).getOrElse(
-            throw new IllegalStateException(s"no commits under $base"))
-          // inspect every commit that won a version we attempted
-          (v to head).foreach { wv =>
-            val wf = TableIO.join(logDir(base), commitName(wv))
-            if (io.exists(wf)) io.readLines(wf).foreach { line =>
-              if (line.nonEmpty) {
-                val n = mapper.readTree(line)
-                if (n.has("metaData") || n.has("protocol"))
-                  throw new java.util.ConcurrentModificationException(
-                    s"concurrent commit $wv of $base changed table " +
-                    "metadata/protocol — refusing to rebase a commit " +
-                    "staged against the old definition")
-                Seq("remove", "add").foreach { kind =>
-                  Option(n.get(kind)).foreach { a =>
-                    val p = a.get("path").asText()
-                    if (removedPaths.contains(p))
-                      throw new java.util.ConcurrentModificationException(
-                        s"concurrent commit $wv of $base touched file $p " +
-                        "which this commit also rewrites — conflicting " +
-                        "writes, refusing")
-                  }
-                }
-              }
-            }
+    TableIO.retryOnConflict(TableIO.RebaseRetries, onLoss = { _ =>
+      // inspect every commit that won a version we attempted
+      val (head, won) = winningActions(base, v)
+      won.foreach { case (wv, n) =>
+        if (n.has("metaData") || n.has("protocol"))
+          throw new java.util.ConcurrentModificationException(
+            s"concurrent commit $wv of $base changed table " +
+            "metadata/protocol — refusing to rebase a commit " +
+            "staged against the old definition")
+        Seq("remove", "add").foreach { kind =>
+          Option(n.get(kind)).foreach { a =>
+            val p = a.get("path").asText()
+            if (removedPaths.contains(p))
+              throw new java.util.ConcurrentModificationException(
+                s"concurrent commit $wv of $base touched file $p " +
+                "which this commit also rewrites — conflicting " +
+                "writes, refusing")
           }
-          v = head + 1 // disjoint → rebase and re-attempt
+        }
       }
-    }
-    -1L // unreachable
+      v = head + 1 // disjoint → rebase and re-attempt
+    }) { _ => writeCommit(base, v, lines, operation); v }
   }
 
   private[sources] def removeJson(path: String, dv: Option[DvDescriptor],

@@ -2724,26 +2724,19 @@ object IcebergInterop {
     // overwrite losing a race would erase the winner's rows) and
     // schema/spec races refuse with the original exception.
     var prevNow = prev
-    var attempt = 0
-    while (true) {
-      try return attemptPublish(prevNow)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 10 || mode != "append" || prev.isEmpty) throw e
-          val m = readMeta(base)
-          val sameSchema =
-            icebergSchemaToSparkJson(prev.get) == icebergSchemaToSparkJson(m)
-          val sameSpec = defaultSpecOf(prev.get) == defaultSpecOf(m)
-          if (!sameSchema || !sameSpec)
-            throw new java.util.ConcurrentModificationException(
-              s"append to $base lost the commit race to a concurrent " +
-              "schema or partition-spec change — the staged files were " +
-              "stamped against the old definition; re-run the append", e)
-          prevNow = Some(m)
-      }
-    }
-    -1L // unreachable
+    TableIO.retryOnConflict(TableIO.RebaseRetries, onLoss = { e =>
+      if (mode != "append" || prev.isEmpty) throw e
+      val m = readMeta(base)
+      val sameSchema =
+        icebergSchemaToSparkJson(prev.get) == icebergSchemaToSparkJson(m)
+      val sameSpec = defaultSpecOf(prev.get) == defaultSpecOf(m)
+      if (!sameSchema || !sameSpec)
+        throw new java.util.ConcurrentModificationException(
+          s"append to $base lost the commit race to a concurrent " +
+          "schema or partition-spec change — the staged files were " +
+          "stamped against the old definition; re-run the append", e)
+      prevNow = Some(m)
+    })(_ => attemptPublish(prevNow))
   }
 
   /** The table's CURRENT schema as a Spark StructType (field-id
@@ -3925,8 +3918,22 @@ object IcebergInterop {
     var curPrev = prev
     var curId = snapshotId
     var curRefs = refs
-    var attempt = 0
-    while (true) {
+    TableIO.retryOnConflict(TableIO.RebaseRetries, onLoss = { e =>
+      val rb = rebase.getOrElse(throw e)
+      val head = readMeta(base)
+      // the staged files/manifests were shaped against prev's
+      // definition: a winner that changed schema or default spec
+      // invalidates them regardless of file overlap
+      if (icebergSchemaToSparkJson(prev) != icebergSchemaToSparkJson(head) ||
+          defaultSpecOf(prev) != defaultSpecOf(head))
+        throw new java.util.ConcurrentModificationException(
+          s"$operation on $base lost the commit race to a concurrent " +
+          "schema or partition-spec change — refusing to rebase", e)
+      rb.check(head) // throws on true conflicts
+      curPrev = head
+      curId = nextSnapshotId(head)
+      curRefs = rb.buildRefs(head, curId)
+    }) { _ =>
       val mlFile = TableIO.join(metaDir, s"snap-$curId-$id.avro")
       // spec v3 §Row Lineage: NEW data manifests (no first_row_id yet)
       // take ids from the head's next-row-id, in list order; carried
@@ -3975,30 +3982,9 @@ object IcebergInterop {
       summary.toSeq.sortBy(_._1).foreach { case (k, v) => sm.put(k, v) }
       snapNode.put("schema-id", root.get("current-schema-id").asInt())
       root.withArray("snapshots").add(snapNode)
-      try {
-        commitMetadataVersion(base, root)
-        return curId
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          val rb = rebase.getOrElse(throw e)
-          if (attempt > 10) throw e
-          val head = readMeta(base)
-          // the staged files/manifests were shaped against prev's
-          // definition: a winner that changed schema or default spec
-          // invalidates them regardless of file overlap
-          if (icebergSchemaToSparkJson(prev) != icebergSchemaToSparkJson(head) ||
-              defaultSpecOf(prev) != defaultSpecOf(head))
-            throw new java.util.ConcurrentModificationException(
-              s"$operation on $base lost the commit race to a concurrent " +
-              "schema or partition-spec change — refusing to rebase", e)
-          rb.check(head) // throws on true conflicts
-          curPrev = head
-          curId = nextSnapshotId(head)
-          curRefs = rb.buildRefs(head, curId)
-      }
+      commitMetadataVersion(base, root)
+      curId
     }
-    -1L // unreachable
   }
 
   /** Tail of a delete commit: every current manifest carried + the new
@@ -5673,18 +5659,17 @@ object IcebergInterop {
       preread: Option[DeltaInterop.DeltaSnapshot] = None): Long = {
     val metaDir = metadataDir(base)
     val hint = TableIO.join(metaDir, "version-hint.text")
-    var attempt = 0
-    while (true) {
+    TableIO.retryOnConflict(TableIO.RederiveRetries) { i =>
       val snap =
-        if (attempt == 0) preread.getOrElse(DeltaInterop.snapshot(spark, base))
+        if (i == 0) preread.getOrElse(DeltaInterop.snapshot(spark, base))
         else DeltaInterop.snapshot(spark, base)
       val enabled = Uniform.enabledFormats(snap)
       require(enabled.forall(_ == "iceberg"),
         s"UniForm sync of $base: enabledFormats " +
         s"'${enabled.mkString(",")}' — this engine mirrors to iceberg only")
-      try {
-        if (!io.exists(hint))
-          return convertFromDelta(spark, base, base, trackUniform = true)
+      if (!io.exists(hint))
+        convertFromDelta(spark, base, base, trackUniform = true)
+      else {
         val meta = readMeta(base)
         require(meta.get("format-version").asInt() == 2,
           s"UniForm mirror at $base has format-version " +
@@ -5695,16 +5680,10 @@ object IcebergInterop {
           .getOrElse(throw new IllegalStateException(
             s"$base already has Iceberg metadata NOT managed by UniForm " +
             "sync — refusing to overwrite a foreign table's metadata"))
-        if (tracked >= snap.version)
-          return meta.get("current-snapshot-id").asLong()
-        return publishUniformIncrement(spark, base, snap, meta, tracked)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
+        if (tracked >= snap.version) meta.get("current-snapshot-id").asLong()
+        else publishUniformIncrement(spark, base, snap, meta, tracked)
       }
     }
-    -1L // unreachable
   }
 
   private def publishUniformIncrement(

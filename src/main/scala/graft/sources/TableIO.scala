@@ -18,7 +18,10 @@ package graft.sources
   *    with EEXIST atomically; `File.renameTo` silently REPLACES on
   *    POSIX and must never be used for claims). Object stores:
   *    conditional PUT (`If-None-Match: *` on S3/GCS/Azure); Hadoop
-  *    FileSystem: `create(path, overwrite = false)`.
+  *    FileSystem: `create(path, overwrite = false)`. A format surfaces
+  *    a lost claim as a `ConcurrentModificationException`, and
+  *    [[TableIO.retryOnConflict]] is the one answer to it: re-derive
+  *    the statement or rebase the commit, within a fixed bound.
   *  - `mirror` — publish an immutable existing file under a second
   *    name, first writer wins (streaming feed mirrors, deep clone).
   *    Local: hard link, zero copy. Object stores: server-side COPY
@@ -134,6 +137,36 @@ object TableIO {
     * layer resolves per call. */
   @volatile var current: TableIO = LocalTableIO
   def apply(): TableIO = current
+
+  /** Retry bound for a statement that re-derives everything (scan,
+    * staged files, commit) from the fresh head after a lost race. */
+  val RederiveRetries = 5
+  /** Retry bound for a commit that rebases its staged actions onto the
+    * winner — metadata work only, so it may try more often. */
+  val RebaseRetries = 10
+
+  /** The optimistic-concurrency loop shared by every table format:
+    * run `attempt(i)` for i = 0, 1, …; after each
+    * `ConcurrentModificationException` (a lost [[putIfAbsent]] claim,
+    * or a read-dependency check the winner broke) run `onLoss`, which
+    * may rebase the caller's state or throw to refuse, and try again.
+    * After `retries` retries the last conflict is rethrown unwrapped;
+    * any other exception propagates at once. */
+  def retryOnConflict[T](retries: Int,
+      onLoss: java.util.ConcurrentModificationException => Unit = _ => ())(
+      attempt: Int => T): T = {
+    var i = 0
+    while (true) {
+      try return attempt(i)
+      catch {
+        case e: java.util.ConcurrentModificationException =>
+          if (i >= retries) throw e
+          onLoss(e)
+          i += 1
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
 
   /** Path join — the formats' `dir/child` shape. */
   def join(dir: String, child: String): String =

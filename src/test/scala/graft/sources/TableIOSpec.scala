@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.pipeline.GraftLog
+import graft.pipeline.{GraftLog, IncrementalView}
 
 /** The storage seam is real: installing a different TableIO routes the
   * format layer's state operations through it — the property an
@@ -15,8 +15,11 @@ import graft.pipeline.GraftLog
 class TableIOSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Delegating proxy that records every operation name. */
-  private final class Recording(under: TableIO) extends TableIO {
+  /** Delegating proxy that records every operation name. With
+    * `loseClaims` every `putIfAbsent` loses (consumes `src`, returns
+    * false): each commit attempt sees another writer holding its slot. */
+  private final class Recording(under: TableIO, loseClaims: Boolean = false)
+      extends TableIO {
     val ops = new ConcurrentLinkedQueue[String]()
     private def rec[A](op: String)(a: => A): A = { ops.add(op); a }
     def exists(p: String) = rec("exists")(under.exists(p))
@@ -30,8 +33,8 @@ class TableIOSpec extends SparkSpec {
     def readLines(p: String) = rec("readLines")(under.readLines(p))
     def writeBytes(p: String, b: Array[Byte]) =
       rec("writeBytes")(under.writeBytes(p, b))
-    def putIfAbsent(s: String, d: String) =
-      rec("putIfAbsent")(under.putIfAbsent(s, d))
+    def putIfAbsent(s: String, d: String) = rec("putIfAbsent")(
+      if (loseClaims) { under.delete(s); false } else under.putIfAbsent(s, d))
     def mirror(s: String, d: String) = rec("mirror")(under.mirror(s, d))
     def moveReplace(s: String, d: String) =
       rec("moveReplace")(under.moveReplace(s, d))
@@ -51,6 +54,16 @@ class TableIOSpec extends SparkSpec {
     val prior = TableIO.current
     TableIO.current = rec
     try body(rec) finally TableIO.current = prior
+  }
+
+  /** Runs `stmt` against a store where every claim is lost; returns
+    * the class of what it threw and how many claims it made. */
+  private def underLostClaims(stmt: => Any): (Class[_], Long) = {
+    val rec = new Recording(LocalTableIO, loseClaims = true)
+    val prior = TableIO.current
+    TableIO.current = rec
+    val e = try intercept[Exception](stmt) finally TableIO.current = prior
+    (e.getClass, rec.ops.toArray.count(_ == "putIfAbsent").toLong)
   }
 
   test("graft-log commits, claims and DVs route through the installed TableIO") {
@@ -98,5 +111,96 @@ class TableIOSpec extends SparkSpec {
     assert(io.readString(s"$dir/slot") == "first")
     // both staging files consumed either way
     assert(!io.exists(s"$dir/a.tmp") && !io.exists(s"$dir/b.tmp"))
+  }
+
+  // retryOnConflict: the one loop every format's commit races go through
+
+  private def conflict() = new java.util.ConcurrentModificationException()
+
+  test("retryOnConflict: a first-time success runs once, no loss handled") {
+    var losses = 0
+    assert(TableIO.retryOnConflict(3, onLoss = _ => losses += 1)(i => i) == 0)
+    assert(losses == 0)
+  }
+
+  test("retryOnConflict: succeeds on the k-th attempt after k-1 losses") {
+    var losses = 0
+    val got = TableIO.retryOnConflict(5, onLoss = _ => losses += 1) { i =>
+      if (i < 3) throw conflict() else i
+    }
+    assert(got == 3 && losses == 3)
+  }
+
+  test("retryOnConflict: on exhaustion rethrows the last CME instance") {
+    val thrown = scala.collection.mutable.Buffer.empty[Exception]
+    val e = intercept[java.util.ConcurrentModificationException](
+      TableIO.retryOnConflict(2) { _ =>
+        val c = conflict(); thrown += c; throw c
+      })
+    assert(thrown.size == 3)
+    assert(e eq thrown.last)
+  }
+
+  test("retryOnConflict: any other exception propagates without a retry") {
+    var attempts = 0
+    var losses = 0
+    intercept[IllegalStateException](
+      TableIO.retryOnConflict(5, onLoss = _ => losses += 1) { _ =>
+        attempts += 1; throw new IllegalStateException("not a race")
+      })
+    assert(attempts == 1 && losses == 0)
+  }
+
+  test("retryOnConflict: an onLoss that throws ends the loop") {
+    var attempts = 0
+    val e = intercept[IllegalArgumentException](TableIO.retryOnConflict(5,
+      onLoss = c => throw new IllegalArgumentException("refuse", c)) { _ =>
+        attempts += 1; throw conflict()
+      })
+    assert(attempts == 1)
+    assert(e.getCause.isInstanceOf[java.util.ConcurrentModificationException])
+  }
+
+  // Retry bounds, pinned: a statement that loses every version claim
+  // re-derives (Delta DML) or rebases (Iceberg append) a fixed number
+  // of times; graft-log's slot-claim loop gives up with an IOException,
+  // which no conflict-retry loop above it retries.
+
+  test("lost claims: Delta UPDATE re-derives 5 times, then throws the CME") {
+    val base = tmp()
+    DeltaInterop.overwrite(spark.range(4).toDF("id").coalesce(1), base)
+    val (cls, claims) = underLostClaims(DeltaDml.updateWhere(spark, base,
+      col("id") === 1L, Map("id" -> lit(9L))))
+    assert(cls == classOf[java.util.ConcurrentModificationException])
+    assert(claims == 6)
+  }
+
+  test("lost claims: graft-log DELETE stops after 11 slot claims") {
+    val base = tmp()
+    GraftLog.overwrite((0L until 4L).toDF("k").coalesce(1), base)
+    val (cls, claims) = underLostClaims(
+      GraftLog.delete(spark, base, col("k") === 1L))
+    assert(cls == classOf[java.io.IOException])
+    assert(claims == 11)
+  }
+
+  test("lost claims: Iceberg append rebases 10 times, then throws the CME") {
+    val base = tmp()
+    IcebergInterop.overwrite(spark.range(4).toDF("id").coalesce(1), base)
+    val (cls, claims) = underLostClaims(IcebergInterop.append(
+      spark.range(4, 6).toDF("id").coalesce(1), base))
+    assert(cls == classOf[java.util.ConcurrentModificationException])
+    assert(claims == 11)
+  }
+
+  test("lost claims: incremental-view refresh stops after 11 slot claims") {
+    val base = tmp()
+    val view = s"${tmp()}/view"
+    GraftLog.overwrite(Seq((0L, 1L, 1.0), (1L, 1L, 2.0)).toDF("k", "g", "v")
+      .coalesce(1), base)
+    val (cls, claims) = underLostClaims(IncrementalView.refreshAggregate(
+      spark, base, view, Seq("g"), Seq("v")))
+    assert(cls == classOf[java.io.IOException])
+    assert(claims == 11)
   }
 }
