@@ -35,14 +35,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val cap = sys.env.getOrElse("SPARK_GRAFT_QUERY_CAP_S", "240").toLong
-    val spark = graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Untimed warmup at the smallest SF: pays JVM/codegen/class-loading
     // cost (~60s cold) once, so timed numbers measure the queries, not
     // JIT warmup. Steady-state is what a long-lived cluster session sees.

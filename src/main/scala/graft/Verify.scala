@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -29,16 +28,8 @@ object Verify {
       .orElse(sys.env.get("SPARK_GRAFT_VERIFY_OUT"))
       .getOrElse("verify_out")
     System.err.println(s"[verify] sfDir=$sfDir outDir=$outDir (args=${args.mkString(" ")})")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // concurrent verify jobs share the cores fairly instead of FIFO
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // concurrent verify jobs share the cores fairly instead of FIFO
+    val spark = Session(extra = _.config("spark.scheduler.mode", "FAIR"))
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

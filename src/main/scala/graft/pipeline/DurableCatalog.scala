@@ -23,19 +23,14 @@ object DurableCatalog {
     * `metastoreDir` and managed tables under `warehouseDir`. Must be the
     * FIRST session in the JVM — `spark.sql.catalogImplementation` is
     * fixed at context start. */
-  def hiveSession(metastoreDir: String, warehouseDir: String,
-                  master: String = "local[4]"): SparkSession = {
+  def hiveSession(metastoreDir: String, warehouseDir: String): SparkSession = {
     System.setProperty("derby.stream.error.file", "/tmp/derby.log")
-    graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "4")
+    graft.Session(extra = _
       .config("spark.sql.catalogImplementation", "hive")
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.hadoop.javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metastoreDir;create=true")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-      .getOrCreate()
+      .enableHiveSupport())
   }
 
   /** Register a parquet location as an external table in the (durable)
@@ -54,7 +49,6 @@ object DurableCatalogProbe {
   def main(args: Array[String]): Unit = {
     val Array(phase, metastoreDir, warehouseDir, dataPath) = args.take(4)
     val spark = DurableCatalog.hiveSession(metastoreDir, warehouseDir)
-    spark.sparkContext.setLogLevel("WARN")
     phase match {
       case "register" =>
         import spark.implicits._

@@ -719,11 +719,11 @@ object GraftLog {
       substring_index(col("_metadata.file_path"), "/", -1))
     .withColumn("__pos", col("_metadata.row_index"))
 
-  /** All live deletion-vector entries of a snapshot: (__dv_file,
-    * __dv_pos) pairs. Empty frame when the snapshot carries no DVs. */
+  /** The deletion-vector entries of the sidecars `dvFiles`:
+    * (__dv_file, __dv_pos) pairs. */
   private def dvEntries(spark: SparkSession, base: String,
-                        snap: Snapshot): DataFrame =
-    spark.read.parquet(snap.dvFiles.map(f => s"$base/$f"): _*)
+                        dvFiles: Seq[String]): DataFrame =
+    spark.read.parquet(dvFiles.map(f => s"$base/$f"): _*)
 
   /** Live deletion state as (file name → deleted row ordinals) — the
     * carrier zero-copy CONVERT uses to translate this log's DV sidecars
@@ -737,7 +737,7 @@ object GraftLog {
     if (snap.dvFiles.isEmpty) return Map.empty
     import spark.implicits._
     val live = snap.files.toSet
-    dvEntries(spark, base, snap)
+    dvEntries(spark, base, snap.dvFiles)
       .select(col("__dv_file"), col("__dv_pos")).distinct()
       .as[(String, Long)].collect()
       .groupBy(_._1)
@@ -751,9 +751,6 @@ object GraftLog {
     * deletes than this should run `purgeDeletes` anyway. */
   private val DvBroadcastMaxRows = 4000000L
 
-  /** Subtract a snapshot's deletion vectors from a coordinate-carrying
-    * scan frame (from `withRowCoords`): one anti join on (file, pos),
-    * broadcast while the DV set is small. Keeps `__file`/`__pos`. */
   /** Row count straight from a parquet FOOTER (block metadata) on the
     * driver — no Spark job, no data pages. */
   private def footerRowCountOf(spark: SparkSession, path: String): Long = {
@@ -766,15 +763,6 @@ object GraftLog {
     try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
     finally reader.close()
   }
-
-  /** DV row count from footers — no Spark job. The previous
-    * `dv.count()` was "metadata-only" in data terms but still a full
-    * job launch per DV-subtracting read (and a table between a
-    * vectored delete and its purge is read MANY times: every census,
-    * rewrite and snapshot read pays the subtraction). */
-  private def dvRowCount(spark: SparkSession, base: String,
-                         snap: Snapshot): Long =
-    snap.dvFiles.map(f => footerRowCountOf(spark, s"$base/$f")).sum
 
   /** LIVE row count of `files` under `snap` from metadata alone:
     * parquet footer row counts minus the distinct DV coordinates that
@@ -795,14 +783,20 @@ object GraftLog {
     }
   }
 
-  private def subtractDv(spark: SparkSession, base: String, snap: Snapshot,
+  /** Subtract the deletion vectors in the sidecars `dvFiles` from a
+    * coordinate-carrying scan frame (from `withRowCoords`): one anti
+    * join on (file, pos), broadcast while the DV set is small. The DV
+    * row count comes from the sidecars' footers — driver-side, no
+    * Spark job (a `dv.count()` launched one per DV-subtracting read,
+    * and a table between a vectored delete and its purge is read MANY
+    * times). Keeps `__file`/`__pos`. */
+  private def subtractDv(spark: SparkSession, base: String,
+                         dvFiles: Seq[String],
                          dfWithCoords: DataFrame): DataFrame = {
-    if (snap.dvFiles.isEmpty) return dfWithCoords
-    val dv = dvEntries(spark, base, snap)
-    // footer-derived count (driver-side, no job) decides join strategy
-    val dvSide =
-      if (dvRowCount(spark, base, snap) <= DvBroadcastMaxRows) broadcast(dv)
-      else dv
+    if (dvFiles.isEmpty) return dfWithCoords
+    val dv = dvEntries(spark, base, dvFiles)
+    val dvRows = dvFiles.map(f => footerRowCountOf(spark, s"$base/$f")).sum
+    val dvSide = if (dvRows <= DvBroadcastMaxRows) broadcast(dv) else dv
     dfWithCoords.join(dvSide,
       col("__file") === col("__dv_file") && col("__pos") === col("__dv_pos"),
       "left_anti")
@@ -810,13 +804,26 @@ object GraftLog {
 
   /** Scan `names` under the snapshot's schema with its deletion vectors
     * subtracted — the ONE way any read/rewrite path may materialize live
-    * rows of dv-carrying files (reading them raw resurrects deletes). */
+    * rows of dv-carrying files (reading them raw resurrects deletes).
+    * With keepCoords every row keeps its `__file`/`__pos` coordinates.
+    * An empty `names` opens no data file: the schema-typed empty frame
+    * (a schemaless log takes its schema from the snapshot's footers). */
   private def readFiles(spark: SparkSession, base: String, snap: Snapshot,
-                        names: Seq[String]): DataFrame = {
-    val df = readerFor(spark, snap).parquet(names.map(f => s"$base/$f"): _*)
-    if (snap.dvFiles.isEmpty) df
-    else subtractDv(spark, base, snap, withRowCoords(df))
-      .drop("__file", "__pos")
+                        names: Seq[String],
+                        keepCoords: Boolean = false): DataFrame = {
+    if (names.isEmpty && snap.schemaJson.isDefined)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson.get)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val df = readerFor(spark, snap).parquet(
+      (if (names.isEmpty) snap.files else names).map(f => s"$base/$f"): _*)
+    if (names.isEmpty) df.filter(lit(false))
+    else if (!keepCoords && snap.dvFiles.isEmpty) df
+    else {
+      val live = subtractDv(spark, base, snap.dvFiles, withRowCoords(df))
+      if (keepCoords) live else live.drop("__file", "__pos")
+    }
   }
 
   /** Read a snapshot (head by default; `version`/`asOfTimestampMs` time-
@@ -867,14 +874,24 @@ object GraftLog {
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 
-  private def overlaps(mn: JsonNode, mx: JsonNode, lo: Any, hi: Any): Boolean =
-    (lo, hi) match {
-      case (l: Number, h: Number) if mn.isNumber && mx.isNumber =>
-        !(mx.asDouble() < l.doubleValue() || mn.asDouble() > h.doubleValue())
-      case (l: String, h: String) if mn.isTextual && mx.isTextual =>
-        !(cmpUtf8(mx.asText(), l) < 0 || cmpUtf8(mn.asText(), h) > 0)
-      case _ => true // type mismatch → keep (conservative)
+  /** A zone-map bound as a double: JSON numbers as they are, and the
+    * texts "NaN", "Infinity" and "-Infinity" that non-finite doubles
+    * are stored as. None for anything else. */
+  private def numOf(n: JsonNode): Option[Double] =
+    if (n.isNumber) Some(n.asDouble())
+    else if (!n.isTextual) None
+    else n.asText() match {
+      case "NaN" => Some(Double.NaN)
+      case "Infinity" => Some(Double.PositiveInfinity)
+      case "-Infinity" => Some(Double.NegativeInfinity)
+      case _ => None
     }
+
+  /** Spark's double order: NaN above every number and equal to itself
+    * (so NaN is the max of any file holding one); -0.0 equals 0.0. */
+  private def cmpNum(a: Double, b: Double): Int =
+    if (a.isNaN || b.isNaN) java.lang.Boolean.compare(a.isNaN, b.isNaN)
+    else if (a < b) -1 else if (a > b) 1 else 0
 
   /** The snapshot's files that can possibly hold `colName` ∈ [lo, hi],
     * decided purely from commit-log zone maps (files without stats for
@@ -887,22 +904,24 @@ object GraftLog {
                            lo: Any, hi: Any): Seq[String] =
     snap.files.filter { f =>
       snap.fileStats.get(f).flatMap(_.get(colName)).flatMap(_.minMax) match {
-        case Some((mn, mx)) => overlaps(mn, mx, lo, hi)
+        case Some((mn, mx)) => overlaps(mn, mx, Some(lo), Some(hi))
         case None => true
       }
     }
 
-  /** `overlaps` with optional (one-sided) bounds: an absent side never
-    * excludes; an incomparable bound keeps the file. */
-  private def overlapsOpt(mn: JsonNode, mx: JsonNode,
+  /** Can a file whose zone map is [mn, mx] hold a value in the
+    * (optionally one-sided) range [lo, hi]? An absent side never
+    * excludes; a bound of another type than the zone map keeps the
+    * file (conservative). */
+  private def overlaps(mn: JsonNode, mx: JsonNode,
                           lo: Option[Any], hi: Option[Any]): Boolean = {
     val geLo = lo.forall {
-      case l: Number if mx.isNumber => mx.asDouble() >= l.doubleValue()
+      case l: Number => numOf(mx).forall(cmpNum(_, l.doubleValue()) >= 0)
       case l: String if mx.isTextual => cmpUtf8(mx.asText(), l) >= 0
       case _ => true
     }
     val leHi = hi.forall {
-      case h: Number if mn.isNumber => mn.asDouble() <= h.doubleValue()
+      case h: Number => numOf(mn).forall(cmpNum(_, h.doubleValue()) <= 0)
       case h: String if mn.isTextual => cmpUtf8(mn.asText(), h) <= 0
       case _ => true
     }
@@ -928,7 +947,7 @@ object GraftLog {
     else snap.files.filter { f =>
       cs.forall { case (c, b) =>
         snap.fileStats.get(f).flatMap(_.get(c)).flatMap(_.minMax) match {
-          case Some((mn, mx)) => overlapsOpt(mn, mx, b.lo, b.hi)
+          case Some((mn, mx)) => overlaps(mn, mx, b.lo, b.hi)
           case None => true
         }
       }
@@ -956,17 +975,7 @@ object GraftLog {
   def readIsNull(spark: SparkSession, base: String, colName: String,
                  version: Option[Long] = None): DataFrame = {
     val snap = snapshot(base, version)
-    val keep = candidatesIsNullIn(snap, colName)
-    val reader = readerFor(spark, snap)
-    if (keep.isEmpty) snap.schemaJson match {
-      case Some(j) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case None =>
-        reader.parquet(snap.files.map(f => s"$base/$f"): _*).filter(lit(false))
-    }
-    else readFiles(spark, base, snap, keep)
+    readFiles(spark, base, snap, candidatesIsNullIn(snap, colName))
       .filter(col(colName).isNull)
   }
 
@@ -994,22 +1003,8 @@ object GraftLog {
     // same version (resolving twice let a commit land in between, pairing
     // v_n files with a v_{n+1} schema) — and log replay runs once, not twice.
     val snap = snapshot(base, version)
-    val keep = candidatesIn(snap, colName, lo, hi)
-    if (keep.isEmpty) {
-      // empty result with the right schema, zero data files opened
-      snap.schemaJson match {
-        case Some(j) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        case None => // schemaless log: fall back to full-snapshot scan schema
-          readerFor(spark, snap)
-            .parquet(snap.files.map(f => s"$base/$f"): _*).filter(lit(false))
-      }
-    } else {
-      readFiles(spark, base, snap, keep)
-        .filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
-    }
+    readFiles(spark, base, snap, candidatesIn(snap, colName, lo, hi))
+      .filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 
   /** Every column any live file tracks stats for (plus `extra`),
@@ -1145,8 +1140,7 @@ object GraftLog {
     // Counts LIVE rows only (deletion vectors subtracted): a file whose
     // surviving rows all match is a pure-metadata drop even when some of
     // its rows were already dv-deleted.
-    val census = subtractDv(spark, base, snap, withRowCoords(
-        readerFor(spark, snap).parquet(candidates.map(f => s"$base/$f"): _*)))
+    val census = readFiles(spark, base, snap, candidates, keepCoords = true)
       .groupBy(col("__file").as("__f"))
       .agg(count(lit(1)).as("__rows"),
         count(when(predicate, lit(1))).as("__hits"))
@@ -1258,8 +1252,7 @@ object GraftLog {
     val candidates = scope(snap)
     if (candidates.isEmpty) return snap.version
     // census on LIVE rows (DVs subtracted): which candidates hold a hit
-    val liveScan = mark(subtractDv(spark, base, snap, withRowCoords(
-        readerFor(spark, snap).parquet(candidates.map(f => s"$base/$f"): _*))))
+    val liveScan = mark(readFiles(spark, base, snap, candidates, keepCoords = true))
     // the selector and SET expressions evaluate across TWO jobs
     // (census + rewrite) — nondeterminism would select different rows
     // in each; probed on the ANALYZED plan (unresolved exprs claim
@@ -1380,8 +1373,7 @@ object GraftLog {
     // pinned: the classification scan (parquet read + DV anti join +
     // classifier joins) feeds BOTH the sizing count and the staged
     // sidecar write — without the pin the whole scan runs twice
-    val dels = classify(subtractDv(spark, base, snap, withRowCoords(
-        readerFor(spark, snap).parquet(candidates.map(f => s"$base/$f"): _*))))
+    val dels = classify(readFiles(spark, base, snap, candidates, keepCoords = true))
       .select(col("__file").as("__dv_file"), col("__pos").as("__dv_pos"))
       .persist()
     try {
@@ -1405,7 +1397,7 @@ object GraftLog {
   def purgeDeletes(spark: SparkSession, base: String): Long = {
     val snap = snapshot(base)
     if (snap.dvFiles.isEmpty) return snap.version
-    val referenced = dvEntries(spark, base, snap)
+    val referenced = dvEntries(spark, base, snap.dvFiles)
       .select(col("__dv_file")).distinct()
       .collect().map(_.getString(0)).toSet // bounded by file count
     val touched = snap.files.filter(referenced.contains)
@@ -1467,10 +1459,7 @@ object GraftLog {
     }
     def antiDv(df: DataFrame, dvNames: Seq[String]): DataFrame =
       if (dvNames.isEmpty) df
-      else withRowCoords(df)
-        .join(broadcast(spark.read.parquet(dvNames.map(f => s"$base/$f"): _*)),
-          col("__file") === col("__dv_file") &&
-            col("__pos") === col("__dv_pos"), "left_anti")
+      else subtractDv(spark, base, dvNames, withRowCoords(df))
         .drop("__file", "__pos")
     val parts = upTo.filter(_.version >= fromVersion).flatMap { c =>
       def stamp(df: DataFrame, ctype: String): DataFrame = df
@@ -1488,7 +1477,7 @@ object GraftLog {
       def dvPart: Option[DataFrame] =
         if (c.addDv.isEmpty || c.operation != "delete_dv") None
         else {
-          val dv = spark.read.parquet(c.addDv.map(f => s"$base/$f"): _*)
+          val dv = dvEntries(spark, base, c.addDv)
           val refs = dv.select(col("__dv_file")).distinct()
             .collect().map(_.getString(0)).toSeq // bounded by file count
           Some(stamp(withRowCoords(

@@ -764,35 +764,31 @@ object DeltaInterop {
       partitionFilters.forall { case (k, v) => pvOf(f, k).contains(v) }))
   }
 
-  /** Plan the scan for a (possibly file-pruned) snapshot: physical→
-    * logical column resolution, DV subtraction, partition-value
-    * re-attachment. */
-  private[sources] def assembleScan(spark: SparkSession, base: String,
-                                    snap: DeltaSnapshot,
-                                    keepCoords: Boolean = false,
-                                    // physical-named columns OUTSIDE the
-                                    // table schema to read as-is (null
-                                    // for files lacking them) — the
-                                    // row-tracking materialized columns
-                                    extraCols: Seq[StructField] = Seq.empty)
-  : DataFrame = {
-    def pvOf(f: AddFile, logical: String): Option[String] =
-      f.partitionValues.get(snap.physicalName(logical))
-        .orElse(f.partitionValues.get(logical))
+  /** The live rows of `files` at the PHYSICAL level — the one
+    * merge-on-read scan every Delta read and rewrite goes through:
+    * physical column names, partition columns absent, deletion vectors
+    * subtracted. With keepCoords every row also carries `__delta_file`
+    * (normalized on-disk path) and `__delta_pos` (raw parquet
+    * row_index, the DV coordinate system). `extraCols` are physical-
+    * named columns OUTSIDE the table schema, read as-is (null for files
+    * lacking them) — the row-tracking materialized columns. */
+  private def physicalScan(spark: SparkSession, base: String,
+                           snap: DeltaSnapshot, files: Seq[AddFile],
+                           keepCoords: Boolean,
+                           extraCols: Seq[StructField] = Seq.empty): DataFrame = {
     // Column resolution against the data files, per mapping mode:
-    //  - `name`: scan by the PHYSICAL parquet column names, project back
-    //    to logical names after the scan;
-    //  - `id`: scan by LOGICAL names carrying `parquet.field.id`
-    //    metadata (= delta.columnMapping.id) — Spark's parquet reader
-    //    then matches columns by the files' field_id, so physical names
-    //    (which id-mode files may have renamed arbitrarily) never matter.
+    //  - `name`: scan by the PHYSICAL parquet column names;
+    //  - `id`: the read schema also carries `parquet.field.id` metadata
+    //    (= delta.columnMapping.id) — Spark's parquet reader then
+    //    matches columns by the files' field_id, so physical names
+    //    (which id-mode files may have renamed arbitrarily) never
+    //    matter. The extraCols have no mapping id by construction and
+    //    resolve by name in both modes (per-field fallback).
     val idMode = snap.columnMappingMode == "id"
     if (idMode)
       // inert for any schema without field-id metadata; same conf the
       // Iceberg read path uses for the identical contract
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    // post-scan reference name for a logical column
-    def scanName(n: String): String = if (idMode) n else snap.physicalName(n)
     val dataSchema = StructType(snap.schema.fields
       .filterNot(f => snap.partitionColumns.contains(f.name))
       .map { f =>
@@ -805,13 +801,67 @@ object DeltaInterop {
           val id = snap.fieldId(f.name).getOrElse(throw new IllegalStateException(
             s"columnMapping.mode=id but field '${f.name}' has no " +
             "delta.columnMapping.id — corrupt metadata (refusing)"))
-          f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
-            .putLong("parquet.field.id", id).build())
+          f.copy(name = snap.physicalName(f.name),
+            metadata = new MetadataBuilder().withMetadata(f.metadata)
+              .putLong("parquet.field.id", id).build())
         }
       } ++ extraCols.map(_.copy(nullable = true)))
+    // add.path is stored percent-encoded per the protocol — decode for
+    // on-disk resolution (a literal-'%' writer is tolerated: malformed
+    // escapes pass through percentDecode unchanged)
+    val scan = spark.read.schema(dataSchema)
+      .parquet(files.map(f => resolveDataPath(base, f.path)): _*)
+    val dvFiles = files.filter(_.dv.exists(_.cardinality > 0))
+    // a plain scan stays metadata-free
+    if (!keepCoords && dvFiles.isEmpty) return scan
+    // coordinates must be captured while `_metadata` is reachable
+    val coords = scan.withColumn("__delta_file", PathCodec.metadataFileKey)
+      .withColumn("__delta_pos", col("_metadata.row_index"))
+    // Merge-on-read: subtract each file's deletion vector by one anti
+    // join on (file, row_index) — the coordinate system DVs address.
+    // DV decode is driver-side and bounded by total DV cardinality
+    // (metadata scale; the join side stops broadcasting past the same
+    // bound graft-log uses).
+    val live = if (dvFiles.isEmpty) coords else {
+      import spark.implicits._
+      val deleted: Seq[(String, Long)] = dvFiles.flatMap { f =>
+        val d = f.dv.get
+        val positions = resolveDvPositions(base, d)
+        require(positions.length.toLong == d.cardinality,
+          s"deletion vector of ${f.path} decodes ${positions.length} positions " +
+          s"but declares cardinality ${d.cardinality} — corrupt DV (refusing)")
+        val key = fileKey(base, f)
+        positions.map(p => (key, p))
+      }
+      val dvDf = deleted.toDF("__delta_file", "__delta_pos")
+      val dvSide = if (deleted.size <= DvBroadcastMaxRows) broadcast(dvDf) else dvDf
+      coords.join(dvSide, Seq("__delta_file", "__delta_pos"), "left_anti")
+    }
+    if (keepCoords) live else live.drop("__delta_file", "__delta_pos")
+  }
+
+  /** The normalized on-disk identity of a data file — the
+    * `__delta_file` value its scan rows carry. */
+  private def fileKey(base: String, f: AddFile): String =
+    PathCodec.metadataPathKey(resolveDataFile(base, f.path))
+
+  /** Plan the scan for a (possibly file-pruned) snapshot: the physical
+    * scan, partition-value re-attachment, and the projection back to
+    * logical column names. */
+  private[sources] def assembleScan(spark: SparkSession, base: String,
+                                    snap: DeltaSnapshot,
+                                    keepCoords: Boolean = false,
+                                    // physical-named columns OUTSIDE the
+                                    // table schema to read as-is (null
+                                    // for files lacking them) — the
+                                    // row-tracking materialized columns
+                                    extraCols: Seq[StructField] = Seq.empty)
+  : DataFrame = {
+    def pvOf(f: AddFile, logical: String): Option[String] =
+      f.partitionValues.get(snap.physicalName(logical))
+        .orElse(f.partitionValues.get(logical))
     // with keepCoords the caller gets two extra columns — `__delta_file`
-    // (normalized on-disk path) and `__delta_pos` (raw parquet
-    // row_index, the DV coordinate system) — for row-level DML
+    // and `__delta_pos` — for row-level DML
     val outSchema = StructType(
       (if (!keepCoords) snap.schema.fields
        else snap.schema.fields ++ Seq(
@@ -822,58 +872,19 @@ object DeltaInterop {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
     }
-    // add.path is stored percent-encoded per the protocol — decode for
-    // on-disk resolution (a literal-'%' writer is tolerated: malformed
-    // escapes pass through percentDecode unchanged)
-    val paths = snap.files.map(f => resolveDataPath(base, f.path))
-    val scan = spark.read.schema(dataSchema).parquet(paths: _*)
-    def fileKey(f: AddFile): String =
-      PathCodec.metadataPathKey(resolveDataFile(base, f.path))
-    val dvFiles = snap.files.filter(_.dv.exists(_.cardinality > 0))
-    import spark.implicits._
-
-    // Merge-on-read: subtract each file's deletion vector by one anti
-    // join on (file, row_index) — the coordinate system DVs address.
-    // DV decode is driver-side and bounded by total DV cardinality
-    // (metadata scale; the join side stops broadcasting past the same
-    // bound graft-log uses). Must run while `_metadata` is reachable.
-    def subtractDv(df0: DataFrame): DataFrame = {
-      if (dvFiles.isEmpty) return df0
-      val deleted: Seq[(String, Long)] = dvFiles.flatMap { f =>
-        val d = f.dv.get
-        val positions = resolveDvPositions(base, d)
-        require(positions.length.toLong == d.cardinality,
-          s"deletion vector of ${f.path} decodes ${positions.length} positions " +
-          s"but declares cardinality ${d.cardinality} — corrupt DV (refusing)")
-        val key = fileKey(f)
-        positions.map(p => (key, p))
-      }
-      val dvDf = deleted.toDF("__delta_file", "__delta_pos")
-      val dvSide = if (deleted.size <= DvBroadcastMaxRows) broadcast(dvDf) else dvDf
-      df0.withColumn("__delta_pos", col("_metadata.row_index"))
-        .join(dvSide, Seq("__delta_file", "__delta_pos"), "left_anti")
-    }
-
-    // file-identity column only when something joins on it (DV subtract
-    // or partition re-attachment) or the caller asked for coordinates —
-    // a plain scan stays metadata-free
-    val coords0 =
-      if (!keepCoords && dvFiles.isEmpty && snap.partitionColumns.isEmpty) scan
-      else scan.withColumn("__delta_file",
-        regexp_replace(col("_metadata.file_path"),
-          PathCodec.metadataFilePathNormalizeRegex, "/"))
-    // raw row_index must be captured while `_metadata` is reachable;
-    // subtractDv re-adds the same value, so the overlap is harmless
-    val coords =
-      if (keepCoords) coords0.withColumn("__delta_pos", col("_metadata.row_index"))
-      else coords0
+    // partition re-attachment joins on the file identity
+    val scan = physicalScan(spark, base, snap, snap.files,
+      keepCoords || snap.partitionColumns.nonEmpty, extraCols)
     val coordCols: Seq[org.apache.spark.sql.Column] =
       (if (keepCoords) Seq(col("__delta_file"), col("__delta_pos"))
        else Seq.empty) ++ extraCols.map(f => col(f.name))
+    def logical(n: String): org.apache.spark.sql.Column =
+      if (snap.partitionColumns.contains(n)) col(n)
+      else col(snap.physicalName(n)).as(n)
     if (snap.partitionColumns.isEmpty)
-      subtractDv(coords).select(snap.schema.fieldNames.map(n =>
-        col(scanName(n)).as(n)) ++ coordCols: _*)
+      scan.select(snap.schema.fieldNames.map(logical) ++ coordCols: _*)
     else {
+      import spark.implicits._
       // (file → partition values) as a broadcast map keyed by the FULL
       // normalized path, not the basename: real Spark/Delta writers
       // reuse identical basenames (part-00000-<jobUUID>.c000.parquet)
@@ -881,22 +892,19 @@ object DeltaInterop {
       // silently duplicates rows and misassigns partition values on
       // collision. One join re-attaches partition columns to every row.
       val keyed = snap.files.map(f =>
-        (fileKey(f), snap.partitionColumns.map(c => pvOf(f, c).orNull)))
+        (fileKey(base, f), snap.partitionColumns.map(c => pvOf(f, c).orNull)))
       require(keyed.map(_._1).distinct.size == keyed.size,
         s"two add.path entries of $base alias to one on-disk file — refusing " +
         "(partition re-attachment would double-count)")
       val pvDf = keyed.toDF("__delta_file", "__pv")
-      val joined = subtractDv(coords).join(broadcast(pvDf), Seq("__delta_file"))
+      val joined = scan.join(broadcast(pvDf), Seq("__delta_file"))
       // partition values serialize as strings; cast back per the schema
       val withParts = snap.partitionColumns.zipWithIndex.foldLeft(joined) {
         case (df, (c, i)) =>
           df.withColumn(c, element_at(col("__pv"), i + 1)
             .cast(snap.schema(c).dataType))
       }
-      withParts.select(snap.schema.fieldNames.map { n =>
-        if (snap.partitionColumns.contains(n)) col(n)
-        else col(scanName(n)).as(n)
-      } ++ coordCols: _*)
+      withParts.select(snap.schema.fieldNames.map(logical) ++ coordCols: _*)
     }
   }
 
@@ -1787,8 +1795,7 @@ object DeltaInterop {
       extraCols = Seq(StructField(ridCol, LongType),
         StructField(verCol, LongType)))
     val fileMap = snap.files.map(f =>
-      (PathCodec.metadataPathKey(resolveDataFile(base, f.path)),
-        f.baseRowId.get, f.defaultRowCommitVersion.get))
+      (fileKey(base, f), f.baseRowId.get, f.defaultRowCommitVersion.get))
       .toDF("__delta_file", "__base_rid", "__def_ver")
     scan.join(broadcast(fileMap), Seq("__delta_file"))
       .withColumn("_row_id",
@@ -1861,78 +1868,52 @@ object DeltaInterop {
     mapper.writeValueAsString(node)
   }
 
-  /** Read a set of live files at the PHYSICAL level (physical column
-    * names, partition columns absent, deletion vectors subtracted) —
-    * the representation OPTIMIZE must preserve byte-for-byte in its
-    * rewritten files. */
-  private def readPhysical(spark: SparkSession, base: String,
-                           snap: DeltaSnapshot,
-                           files: Seq[AddFile],
-                           // keep `__delta_file` (normalized on-disk
-                           // path) on every row — the binned rewrite
-                           // joins it to a file→bin map
-                           keepFile: Boolean = false,
-                           // additionally read the materialized
-                           // row-tracking columns (null where a file
-                           // lacks them) and keep `__delta_pos`
-                           withRowIds: Boolean = false): DataFrame = {
-    // id-mode tables resolve by parquet field id (physical names in the
-    // files are free to diverge from the metadata's physicalName): the
-    // read schema carries the mapping ids, and the session confs make
-    // Spark's reader match by them AND the downstream staging writes
-    // stamp them back into rewritten files. The materialized
-    // row-tracking columns have no mapping id by construction — they
-    // resolve by their fixed physical names in both modes (per-field
-    // fallback, same as assembleScan's extraCols).
-    val idMode = snap.columnMappingMode == "id"
-    if (idMode) {
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+  /** The live rows of `files` as a rewrite writes them back:
+    * `physicalScan` with `__delta_file` kept (the binned rewrite joins
+    * it to a file→bin map). Row tracking: the rewrite moves rows
+    * between files, so every surviving row's id AND commit version
+    * MATERIALIZE into the rewritten file — resolved from the source
+    * file's materialized columns else baseRowId + position — so ids
+    * stay stable through the dataChange=false swap, exactly the §Row
+    * Tracking preservation contract for OPTIMIZE. id-mode tables stamp
+    * the mapping ids back into the staged files (physical names in
+    * id-mode files are free to diverge). */
+  private def rewriteSource(spark: SparkSession, base: String,
+                            snap: DeltaSnapshot,
+                            files: Seq[AddFile]): DataFrame = {
+    if (snap.columnMappingMode == "id")
       spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    }
-    val dataSchema = StructType(snap.schema.fields
-      .filterNot(f => snap.partitionColumns.contains(f.name))
-      .map { f =>
-        val phys = f.copy(name = snap.physicalName(f.name))
-        if (!idMode) phys
-        else {
-          val id = snap.fieldId(f.name).getOrElse(throw new IllegalStateException(
-            s"columnMapping.mode=id but field '${f.name}' has no " +
-            "delta.columnMapping.id — corrupt metadata (refusing)"))
-          phys.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
-            .putLong("parquet.field.id", id).build())
-        }
-      } ++
-      (if (withRowIds) Seq(
-        StructField(MaterializedRowIdCol, LongType),
-        StructField(MaterializedRowVerCol, LongType)) else Seq.empty))
-    val paths = files.map(f => resolveDataPath(base, f.path))
-    val scan = spark.read.schema(dataSchema).parquet(paths: _*)
-    val outCols = dataSchema.fieldNames.map(col) ++
-      (if (keepFile) Seq(col("__delta_file")) else Seq.empty) ++
-      (if (withRowIds) Seq(col("__delta_pos")) else Seq.empty)
-    val dvFiles = files.filter(_.dv.exists(_.cardinality > 0))
-    if (dvFiles.isEmpty) {
-      if (!keepFile && !withRowIds) scan
-      else scan.withColumn("__delta_file",
-          regexp_replace(col("_metadata.file_path"),
-            PathCodec.metadataFilePathNormalizeRegex, "/"))
-        .withColumn("__delta_pos", col("_metadata.row_index"))
-        .select(outCols: _*)
-    } else {
-      import spark.implicits._
-      val deleted: Seq[(String, Long)] = dvFiles.flatMap { f =>
-        val key = PathCodec.metadataPathKey(resolveDataFile(base, f.path))
-        resolveDvPositions(base, f.dv.get).map(p => (key, p))
-      }
-      scan
-        .withColumn("__delta_file", regexp_replace(col("_metadata.file_path"),
-          PathCodec.metadataFilePathNormalizeRegex, "/"))
-        .withColumn("__delta_pos", col("_metadata.row_index"))
-        .join(broadcast(deleted.toDF("__delta_file", "__delta_pos")),
-          Seq("__delta_file", "__delta_pos"), "left_anti")
-        .select(outCols: _*)
-    }
+    if (!snap.rowTrackingEnabled)
+      return physicalScan(spark, base, snap, files, keepCoords = true)
+        .drop("__delta_pos")
+    import spark.implicits._
+    val scan = physicalScan(spark, base, snap, files, keepCoords = true,
+      extraCols = rowTrackingFields)
+    val fileMap = files.map(f =>
+        (fileKey(base, f), f.baseRowId.get, f.defaultRowCommitVersion.getOrElse(0L)))
+      .toDF("__delta_file", "__base_rid", "__def_ver")
+    scan.join(broadcast(fileMap), Seq("__delta_file"))
+      .withColumn(MaterializedRowIdCol,
+        coalesce(col(MaterializedRowIdCol),
+          col("__base_rid") + col("__delta_pos")))
+      .withColumn(MaterializedRowVerCol,
+        coalesce(col(MaterializedRowVerCol), col("__def_ver")))
+      .drop("__delta_pos", "__base_rid", "__def_ver")
   }
+
+  /** The materialized row-tracking columns a rewrite carries. */
+  private val rowTrackingFields: Seq[StructField] = Seq(
+    StructField(MaterializedRowIdCol, LongType),
+    StructField(MaterializedRowVerCol, LongType))
+
+  /** The schema a rewrite's staged files are written under: the
+    * physical data columns, plus the row-tracking columns on tracked
+    * tables — what `collectAddStats` reads back. */
+  private def rewriteSchema(snap: DeltaSnapshot): StructType =
+    StructType(snap.schema.fields
+      .filterNot(f => snap.partitionColumns.contains(f.name))
+      .map(f => f.copy(name = snap.physicalName(f.name))) ++
+      (if (snap.rowTrackingEnabled) rowTrackingFields else Seq.empty))
 
   /** Fresh burn ranges + the advanced high-water-mark domain for a
     * row-tracked commit's adds. Every row in a binned rewrite carries
@@ -1991,33 +1972,9 @@ object DeltaInterop {
     import spark.implicits._
     val files = bins.flatMap(_._2)
     val binOf: Seq[(String, Int)] = bins.zipWithIndex.flatMap {
-      case ((_, fs), b) => fs.map(f =>
-        PathCodec.metadataPathKey(resolveDataFile(base, f.path)) -> b)
+      case ((_, fs), b) => fs.map(f => fileKey(base, f) -> b)
     }
-    val tracked = snap.rowTrackingEnabled
-    // row tracking: the compaction moves rows between files, so every
-    // surviving row's id AND commit version MATERIALIZE into the
-    // rewritten file (resolved from the source file's materialized
-    // columns else baseRowId + position) — ids stay stable through the
-    // dataChange=false swap, exactly the §Row Tracking preservation
-    // contract for OPTIMIZE
-    val scan0 = readPhysical(spark, base, snap, files,
-      keepFile = true, withRowIds = tracked)
-    val scan =
-      if (!tracked) scan0
-      else {
-        val fileMap = files.map(f =>
-            (PathCodec.metadataPathKey(resolveDataFile(base, f.path)),
-              f.baseRowId.get, f.defaultRowCommitVersion.getOrElse(0L)))
-          .toDF("__delta_file", "__base_rid", "__def_ver")
-        scan0.join(broadcast(fileMap), Seq("__delta_file"))
-          .withColumn(MaterializedRowIdCol,
-            coalesce(col(MaterializedRowIdCol),
-              col("__base_rid") + col("__delta_pos")))
-          .withColumn(MaterializedRowVerCol,
-            coalesce(col(MaterializedRowVerCol), col("__def_ver")))
-          .drop("__delta_pos", "__base_rid", "__def_ver")
-      }
+    val scan = rewriteSource(spark, base, snap, files)
     val scratch = TableIO.join(base, s".opt_${UUID.randomUUID()}")
     val id = UUID.randomUUID().toString
     val staged = StagedFiles.publish(scratch)(
@@ -2032,13 +1989,7 @@ object DeltaInterop {
       io.move(p.path, TableIO.join(base, name))
       AddFile(name, bins(p.partition.head._2.toInt)._1)
     }
-    collectAddStats(spark, base, staged,
-      StructType(snap.schema.fields
-        .filterNot(f => snap.partitionColumns.contains(f.name))
-        .map(f => f.copy(name = snap.physicalName(f.name))) ++
-        (if (tracked) Seq(
-          StructField(MaterializedRowIdCol, LongType),
-          StructField(MaterializedRowVerCol, LongType)) else Seq.empty)))
+    collectAddStats(spark, base, staged, rewriteSchema(snap))
   }
 
   /** OPTIMIZE: bin-packing compaction, exactly as Delta's OPTIMIZE
@@ -2049,7 +2000,7 @@ object DeltaInterop {
     * `dataChange=false` so downstream CDF/streaming consumers know no
     * row changed. Data files are read at the physical level: `none` and
     * `name` tables compact by physical column name; `id` tables resolve
-    * by parquet field id (readPhysical stamps the mapping ids into the
+    * by parquet field id (physicalScan stamps the mapping ids into the
     * read schema, and the rewrite stamps them back into the staged
     * files — physical names in id-mode files are free to diverge).
     *
@@ -2228,37 +2179,11 @@ object DeltaInterop {
       s"live file ${f.path} carries no baseRowId — corrupt " +
       "row-tracking state (refusing)"))
     val zPhys = zorderBy.map(snap.physicalName)
-    val dataFields = StructType(snap.schema.fields
-      .filterNot(f => snap.partitionColumns.contains(f.name))
-      .map(f => f.copy(name = snap.physicalName(f.name))) ++
-      (if (tracked) Seq(
-        StructField(MaterializedRowIdCol, LongType),
-        StructField(MaterializedRowVerCol, LongType)) else Seq.empty))
     val newAdds = mutable.ArrayBuffer.empty[AddFile]
     files.groupBy(_.partitionValues).foreach { case (pv, fs) =>
-      // row tracking: the clustering rewrite re-positions rows, so
-      // every row's (id, commit version) MATERIALIZES into the new
-      // files — resolved from the source's materialized columns else
-      // baseRowId + position, same contract as the binned rewrite
-      val rows0 = readPhysical(spark, base, snap, fs,
-        keepFile = tracked, withRowIds = tracked)
-      val rows1 =
-        if (!tracked) rows0
-        else {
-          import spark.implicits._
-          val fileMap = fs.map(f =>
-              (PathCodec.metadataPathKey(resolveDataFile(base, f.path)),
-                f.baseRowId.get, f.defaultRowCommitVersion.getOrElse(0L)))
-            .toDF("__delta_file", "__base_rid", "__def_ver")
-          rows0.join(broadcast(fileMap), Seq("__delta_file"))
-            .withColumn(MaterializedRowIdCol,
-              coalesce(col(MaterializedRowIdCol),
-                col("__base_rid") + col("__delta_pos")))
-            .withColumn(MaterializedRowVerCol,
-              coalesce(col(MaterializedRowVerCol), col("__def_ver")))
-            .drop("__delta_file", "__delta_pos", "__base_rid", "__def_ver")
-        }
-      val rows = rows1
+      // the clustering rewrite re-positions rows: ids materialize
+      // through it, same contract as the binned rewrite
+      val rows = rewriteSource(spark, base, snap, fs).drop("__delta_file")
         .withColumn("__graft_z",
           graft.functions.VecExpressions.zorderNativeN(zPhys.map(col): _*))
         .repartitionByRange(filesPerPartition, col("__graft_z"))
@@ -2266,7 +2191,7 @@ object DeltaInterop {
         .drop("__graft_z")
       val staged = stageAdds(rows, base, Seq.empty)
         .map(_.copy(partitionValues = pv, tags = tags))
-      newAdds ++= collectAddStats(spark, base, staged, dataFields)
+      newAdds ++= collectAddStats(spark, base, staged, rewriteSchema(snap))
     }
     val v = snap.version + 1
     val (adds, domainLines) = withRowIdRanges(snap, newAdds.toSeq, v)

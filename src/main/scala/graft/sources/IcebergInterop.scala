@@ -1296,6 +1296,11 @@ object IcebergInterop {
       case _ => true
     }
 
+  /** Delete files up to this many on-disk bytes broadcast as the
+    * join side that applies them; past that, the join shuffles — the
+    * same decision shape as the Delta DV path. */
+  private val DeleteBroadcastMaxBytes = 64L << 20
+
   /** Plan the scan for a (possibly pruned) file set and subtract v2
     * merge-on-read deletes. */
   private def assembleRead(spark: SparkSession, snap: IcebergSnapshot,
@@ -1366,10 +1371,7 @@ object IcebergInterop {
       else {
         // attach provenance BEFORE any join: _metadata only resolves on
         // the file-scan relation itself
-        val withFile = scanRaw.withColumn("__ice_file",
-          org.apache.spark.sql.functions.regexp_replace(
-            org.apache.spark.sql.functions.col("_metadata.file_path"),
-            PathCodec.metadataFilePathNormalizeRegex, "/"))
+        val withFile = scanRaw.withColumn("__ice_file", PathCodec.metadataFileKey)
         if (keepCoords || snap.deletes.nonEmpty)
           withFile.withColumn("__ice_pos",
             org.apache.spark.sql.functions.col("_metadata.row_index"))
@@ -1474,106 +1476,78 @@ object IcebergInterop {
     var out = scan // __ice_file (and __ice_pos when needed) attached above
 
     if (snap.deletes.nonEmpty) {
-      // Two encodings share the delete-manifest slot: v2 position-
-      // delete PARQUET ((file_path, pos) rows) and v3 DELETION VECTORS
-      // (puffin blobs, one per referenced data file).
-      val (dvDels, posDels) = snap.deletes.partition(_.dv)
-      // v3 DVs: decode driver-side — bounded by the on-disk DV bytes
-      // (compressed bitmaps, metadata scale), the exact shape of the
-      // Delta DV read path — into (referenced raw path, pos, seq) rows.
-      val dvRows: Seq[(String, Long, Long)] = dvDels.flatMap { d =>
-        val bytes = io.readBytes(d.path)
-        val ps = Puffin.readDvBlob(bytes, dvOffsetOf(d), dvSizeOf(d), d.path)
-        require(d.recordCount < 0 || ps.length.toLong == d.recordCount,
-          s"deletion vector ${d.path} decodes ${ps.length} positions but " +
-          s"declares ${d.recordCount} — corrupt DV (refusing)")
-        ps.map(p => (d.referencedDataFile.get, p, d.seq))
-      }
-      // a DV supersedes position-delete rows aimed at its file: v3
-      // forbids NEW position-delete files, so any DV postdates every
-      // position delete for its target, and the DV writer merged those
-      // positions into the vector — drop them instead of double-applying
-      val dvRefs: Set[String] = dvRows.map(_._1).toSet
-      import spark.implicits._
-      val dvDf = dvRows.toDF("file_path", "pos", "__del_seq")
-      // superseded rows drop via ONE broadcast anti join — a literal
-      // isin() would grow the plan linearly with the DV count
-      val dvRefsDf = dvRefs.toSeq.toDF("file_path")
-      val posParts = posDels.groupBy(_.seq).toSeq.map { case (seq, fs) =>
-        val delSchema = StructType(Seq(
-          StructField("file_path", StringType),
-          StructField("pos", LongType)))
-        val df0 = spark.read.schema(delSchema).parquet(fs.map(_.path): _*)
-          .withColumn("__del_seq", lit(seq))
-        if (dvRefs.isEmpty) df0
-        else df0.join(broadcast(dvRefsDf), Seq("file_path"), "left_anti")
-      }
       // Delete rows reference data files by the manifest's EXACT
       // file_path string, so they resolve through a broadcast
       // (raw path → identity, seq) map — which also drops deletes
       // aimed at pruned or dead files — then subtract by ONE anti
       // join on (file, row_index); position deletes and DVs apply to
       // data files with seq ≤ the delete's.
-      val deletesDf = (posParts :+ dvDf).reduce(_ unionByName _)
-      val resolved = deletesDf
+      val resolved = deleteCoordsDf(spark, snap.deletes)
         .join(broadcast(fileMap), col("file_path") === col("__raw"))
         .where(col("__data_seq") <= col("__del_seq"))
         .select(col("__ice_file"), col("pos").as("__ice_pos"))
-      // broadcast the delete side while it is small (driver knows the
-      // on-disk delete bytes); past that, shuffle — same decision shape
-      // as the Delta DV path
       val delSide =
-        if (snap.deletes.map(_.sizeBytes).sum <= (64L << 20)) broadcast(resolved)
+        if (snap.deletes.map(_.sizeBytes).sum <= DeleteBroadcastMaxBytes)
+          broadcast(resolved)
         else resolved
       out = out.join(delSide, Seq("__ice_file", "__ice_pos"), "left_anti")
       if (!keepCoords) out = out.drop("__ice_pos")
     }
 
     if (snap.eqDeletes.nonEmpty) {
-      // Equality deletes: each delete row holds values of the
-      // equality_ids columns; a data row dies when those values match
-      // NULL-SAFELY (IS NOT DISTINCT FROM, per spec) and the data file's
-      // seq is STRICTLY below the delete's. Field ids resolve to column
-      // names through the schema's parquet.field.id metadata — names in
-      // the delete file are read by id too (fieldId.read is on), so
-      // renamed columns stay correct. One anti join per distinct
-      // (sequence, column-set) — bounded by delete commits, each a
-      // linear equi-join on the equality key.
       out = out.join(broadcast(fileMap.select("__ice_file", "__data_seq")),
         Seq("__ice_file"))
-      // name-mapped (converted) tables strip the parquet.field.id
-      // metadata — their equality ids resolve through the metadata
-      // JSON's own id map instead (the same fallback readRange uses
-      // for bound keys); the delete FILES still read by name (their
-      // columns carry the logical names)
-      val idToName: Map[Int, String] = {
-        val fromMeta = snap.schema.fields.flatMap(f =>
-          if (f.metadata.contains("parquet.field.id"))
-            Some(f.metadata.getLong("parquet.field.id").toInt -> f.name)
-          else None).toMap
-        if (fromMeta.nonEmpty) fromMeta else snap.fieldNamesById
+      equalityDeleteSides(spark, snap, snap.eqDeletes).foreach {
+        case (seq, side, matches) =>
+          out = out.join(side, matches && col("__data_seq") < lit(seq),
+            "left_anti")
       }
-      snap.eqDeletes.groupBy(d => (d.seq, d.equalityFieldIds)).toSeq
-        .sortBy(_._1._1).foreach { case ((seq, ids), fs) =>
-          val names = ids.map(id => idToName.getOrElse(id,
-            throw new IllegalStateException(
-              s"equality_ids references field id $id not present in the " +
-              "current schema (refusing)")))
-          val delSchema = StructType(names.map(n => snap.schema(n)))
-          val del = spark.read.schema(delSchema).parquet(fs.map(_.path): _*)
-            .dropDuplicates(names)
-            .select(names.map(n => col(n).as(s"__eq_$n")): _*)
-          val delSide =
-            if (fs.map(_.sizeBytes).sum <= (64L << 20)) broadcast(del) else del
-          val cond = names.map(n => col(n) <=> col(s"__eq_$n")).reduce(_ && _) &&
-            col("__data_seq") < lit(seq)
-          out = out.join(delSide, cond, "left_anti")
-        }
     }
     val coordCols =
       if (keepCoords) Seq(col("__ice_file"), col("__ice_pos")) else Seq.empty
     out.select(snap.schema.fieldNames.map(col) ++ coordCols ++
       extraCols.map(f => col(f.name)): _*)
+  }
+
+  /** The equality-delete sides of `eqs`, oldest first — one per
+    * distinct (sequence, equality ids), so bounded by delete commits:
+    * the delete files' distinct values as `__eq_<column>` columns
+    * (broadcast while small) and the condition matching them against a
+    * data row NULL-SAFELY (IS NOT DISTINCT FROM, per spec). A data row
+    * dies only where it matches AND its file's data sequence is
+    * STRICTLY below the side's — that gate is the caller's. Field ids
+    * resolve to `snap`'s column names through the schema's
+    * parquet.field.id metadata (delete files read by id too, so renamed
+    * columns stay correct); name-mapped (converted) tables strip that
+    * metadata and resolve through the metadata JSON's own id map (the
+    * delete FILES still read by name — their columns carry the logical
+    * names). */
+  private def equalityDeleteSides(spark: SparkSession, snap: IcebergSnapshot,
+                                  eqs: Seq[EqualityDeleteFile])
+      : Seq[(Long, DataFrame, org.apache.spark.sql.Column)] = {
+    import org.apache.spark.sql.functions._
+    val idToName: Map[Int, String] = {
+      val fromMeta = snap.schema.fields.flatMap(f =>
+        if (f.metadata.contains("parquet.field.id"))
+          Some(f.metadata.getLong("parquet.field.id").toInt -> f.name)
+        else None).toMap
+      if (fromMeta.nonEmpty) fromMeta else snap.fieldNamesById
+    }
+    eqs.groupBy(d => (d.seq, d.equalityFieldIds)).toSeq.sortBy(_._1._1).map {
+      case ((seq, ids), fs) =>
+        val names = ids.map(id => idToName.getOrElse(id,
+          throw new IllegalStateException(
+            s"equality_ids references field id $id not present in the " +
+            "current schema (refusing)")))
+        val del = spark.read.schema(StructType(names.map(n => snap.schema(n))))
+          .parquet(fs.map(_.path): _*)
+          .dropDuplicates(names)
+          .select(names.map(n => col(n).as(s"__eq_$n")): _*)
+        val side =
+          if (fs.map(_.sizeBytes).sum <= DeleteBroadcastMaxBytes) broadcast(del)
+          else del
+        (seq, side, names.map(n => col(n) <=> col(s"__eq_$n")).reduce(_ && _))
+    }
   }
 
   /** Fill identity-partition columns from the manifests' per-file
@@ -3001,29 +2975,45 @@ object IcebergInterop {
           .distinct().collect().map(_.getString(0)).toSet
     }
 
-  /** All delete coordinates of `dels` as one (file_path, pos) frame,
-    * whatever their encoding: position-delete parquet scans
-    * distributed; v3 deletion vectors decode driver-side (bounded by
-    * the on-disk bitmap bytes, the Delta-DV read shape). */
+  /** All delete coordinates of `dels` as one (file_path, pos,
+    * __del_seq) frame, whatever their encoding — `file_path` is the
+    * manifest's exact data-file string, `__del_seq` the delete's data
+    * sequence. Position-delete parquet scans distributed (one scan per
+    * sequence); v3 deletion vectors decode driver-side — bounded by the
+    * on-disk DV bytes (compressed bitmaps, metadata scale), the exact
+    * shape of the Delta DV read path — and must decode to their
+    * manifest record_count. A DV supersedes position-delete rows aimed
+    * at its file: v3 forbids NEW position-delete files, so any DV
+    * postdates every position delete for its target, and the DV writer
+    * merged those positions into the vector — they drop instead of
+    * double-applying. */
   private def deleteCoordsDf(spark: SparkSession,
                              dels: Seq[PositionDeleteFile]): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, lit}
     import spark.implicits._
+    val (dvDels, posDels) = dels.partition(_.dv)
+    val dvRows: Seq[(String, Long, Long)] = dvDels.flatMap { d =>
+      val ps = Puffin.readDvBlob(io.readBytes(d.path), dvOffsetOf(d),
+        dvSizeOf(d), d.path)
+      require(d.recordCount < 0 || ps.length.toLong == d.recordCount,
+        s"deletion vector ${d.path} decodes ${ps.length} positions but " +
+        s"declares ${d.recordCount} — corrupt DV (refusing)")
+      ps.map(p => (d.referencedDataFile.get, p, d.seq))
+    }
+    // superseded rows drop via ONE broadcast anti join — a literal
+    // isin() would grow the plan linearly with the DV count
+    val dvRefs = dvRows.map(_._1).distinct.toDF("file_path")
     val delSchema = StructType(Seq(
       StructField("file_path", StringType),
       StructField("pos", LongType)))
-    val (dvs, pds) = dels.partition(_.dv)
-    val parts =
-      (if (pds.isEmpty) Seq.empty
-       else Seq(spark.read.schema(delSchema).parquet(pds.map(_.path): _*))) ++
-      (if (dvs.isEmpty) Seq.empty
-       else Seq(dvs.flatMap { d =>
-         Puffin.readDvBlob(io.readBytes(d.path), dvOffsetOf(d),
-             dvSizeOf(d), d.path)
-           .map(p => (d.referencedDataFile.get, p))
-       }.toDF("file_path", "pos")))
-    parts.reduceOption(_ unionByName _).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delSchema))
+    val posParts = posDels.groupBy(_.seq).toSeq.map { case (seq, fs) =>
+      val df0 = spark.read.schema(delSchema).parquet(fs.map(_.path): _*)
+        .withColumn("__del_seq", lit(seq))
+      if (dvRows.isEmpty) df0
+      else df0.join(broadcast(dvRefs), Seq("file_path"), "left_anti")
+    }
+    (posParts :+ dvRows.toDF("file_path", "pos", "__del_seq"))
+      .reduce(_ unionByName _)
   }
 
   /** Format-v3 DELETE tail (spec v3 §Deletion Vectors): the matched
@@ -3062,18 +3052,12 @@ object IcebergInterop {
     val toFold =
       if (legacy.isEmpty) matched
       else {
-        val delSchema = StructType(Seq(
-          StructField("file_path", StringType),
-          StructField("pos", LongType)))
         val touchedSeq = snap.files
           .filter(f => touchedRaw.contains(f.rawPath))
           .map(f => (f.rawPath, f.seq)).toDF("file_path", "__fseq")
-        val legacyRows = legacy.groupBy(_.seq).toSeq.map { case (seq, fs) =>
-          spark.read.schema(delSchema).parquet(fs.map(_.path): _*)
-            .withColumn("__dseq", lit(seq))
-        }.reduce(_ unionByName _)
+        val legacyRows = deleteCoordsDf(spark, legacy)
           .join(broadcast(touchedSeq), Seq("file_path"))
-          .where(col("__fseq") <= col("__dseq"))
+          .where(col("__fseq") <= col("__del_seq"))
           .select(col("file_path"), col("pos"))
         matched.unionByName(legacyRows)
       }
@@ -3316,29 +3300,11 @@ object IcebergInterop {
             // equality deletes: a carried row dies when its equality
             // values match null-safely AND its file's data sequence is
             // STRICTLY below the delete's (spec §Scan Planning)
-            val idToName = head.schema.fields.flatMap(f =>
-              if (f.metadata.contains("parquet.field.id"))
-                Some(f.metadata.getLong("parquet.field.id").toInt -> f.name)
-              else None).toMap
-            val eqDead = newEq.groupBy(d => (d.seq, d.equalityFieldIds)).toSeq
-              .sortBy(_._1._1).map { case ((seq, fids), fs) =>
-                val names = fids.map(id => idToName.getOrElse(id,
-                  throw new IllegalStateException(
-                    s"equality_ids references field id $id not present in " +
-                    "the current schema (refusing)")))
-                val delValSchema = StructType(names.map(n => head.schema(n)))
-                val vals = spark.read.schema(delValSchema)
-                  .parquet(fs.map(_.path): _*).dropDuplicates(names)
-                  .select(names.map(n => col(n).as(s"__eq_$n")): _*)
-                // same size-gated broadcast decision as assembleRead
-                val delSide =
-                  if (fs.map(_.sizeBytes).sum <= (64L << 20)) broadcast(vals)
-                  else vals
-                val cond = names.map(n => col(n) <=> col(s"__eq_$n"))
-                  .reduce(_ && _)
+            val eqDead = equalityDeleteSides(spark, head, newEq).map {
+              case (seq, side, matches) =>
                 liveBefore.filter(col("__seq") < lit(seq))
-                  .join(delSide, cond, "left_semi")
-              }
+                  .join(side, matches, "left_semi")
+            }
             val allDead = (posDead.toSeq ++ eqDead)
               .reduceOption(_ unionByName _).map(
                 _.dropDuplicates("file_path", "pos") // one emission per row
@@ -4917,27 +4883,11 @@ object IcebergInterop {
       .toDF("__ice_file", "__raw", "__data_seq")
     val scan = scan0.join(broadcast(fileMap), Seq("__ice_file")).persist()
     try {
-      val idToName = snap.fieldNamesById
-      val deadParts = snap.eqDeletes
-        .groupBy(d => (d.seq, d.equalityFieldIds)).toSeq.map {
-          case ((seq, ids), fs) =>
-            val names = ids.map(id => idToName.getOrElse(id,
-              throw new IllegalStateException(
-                s"equality_ids references field id $id not present in " +
-                "the current schema (refusing)")))
-            val delSchema = StructType(names.map(n => snap.schema(n)))
-            val del = spark.read.schema(delSchema)
-              .parquet(fs.map(_.path): _*).dropDuplicates(names)
-              .select(names.map(n => col(n).as(s"__eq_$n")): _*)
-            val delSide =
-              if (fs.map(_.sizeBytes).sum <= (64L << 20)) broadcast(del)
-              else del
-            val cond = names.map(n => col(n) <=> col(s"__eq_$n"))
-              .reduce(_ && _) && col("__data_seq") < lit(seq)
-            scan.join(delSide, cond, "left_semi")
-              .select(col("__raw").as("file_path"),
-                col("__ice_pos").as("pos"))
-        }
+      val deadParts = equalityDeleteSides(spark, snap, snap.eqDeletes).map {
+        case (seq, side, matches) =>
+          scan.join(side, matches && col("__data_seq") < lit(seq), "left_semi")
+            .select(col("__raw").as("file_path"), col("__ice_pos").as("pos"))
+      }
       val dead = deadParts.reduce(_ unionByName _)
         .dropDuplicates("file_path", "pos")
       val snapshotId = nextSnapshotId(prev)

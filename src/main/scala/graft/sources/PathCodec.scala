@@ -155,7 +155,16 @@ private[graft] object PathCodec {
 
   /** The matching Spark-side normalization of `_metadata.file_path`:
     * strip the scheme, keep the percent-encoded path. */
-  val metadataFilePathNormalizeRegex: String = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
+  private val metadataFilePathNormalizeRegex: String = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
+
+  /** A scan row's file identity: `_metadata.file_path` normalized by
+    * the regex above. Must equal `metadataPathKey` of the same file —
+    * every file-identity join pairs the two. Add it directly on a scan
+    * frame, before any join severs `_metadata`. */
+  val metadataFileKey: org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.regexp_replace(
+      org.apache.spark.sql.functions.col("_metadata.file_path"),
+      metadataFilePathNormalizeRegex, "/")
 }
 
 /** Atomic PUT-IF-ABSENT file publication — the commit primitive shared

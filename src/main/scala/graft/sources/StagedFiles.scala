@@ -101,8 +101,7 @@ private[graft] object StagedFiles {
       ndv.map(c => approx_count_distinct(col(c))) ++
       extras.map { case (_, c) => first(c, ignoreNulls = false) }
     val byKey = schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
-      .groupBy(regexp_replace(col("_metadata.file_path"),
-        PathCodec.metadataFilePathNormalizeRegex, "/"))
+      .groupBy(PathCodec.metadataFileKey)
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map(r => r.getString(0) -> r).toMap

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` of named SparkEntry queries to files —
   * the plan evidence for optimization rounds (guide §7.2). For the
@@ -10,20 +9,14 @@ import org.apache.spark.sql.SparkSession
   * the per-operator code paths and PlanAudit covers their shapes.
   *
   * Usage: runMain graft.tools.DumpPlans <outDir> <suffix> [q...]
-  * Env: SF_DIR (default sf0.1), CPUS (default 32). */
+  * Env: SF_DIR (default sf0.1); cores per `graft.Session`. */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r13")
     val suffix = args.lift(1).getOrElse("after")
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("CPUS", "32")
-    val spark = graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

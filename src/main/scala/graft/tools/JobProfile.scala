@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job-level profiler (dev tool, not part of the driver
   * contract): runs named SparkEntry queries under a SparkListener that
@@ -13,21 +12,16 @@ import org.apache.spark.sql.SparkSession
   * work (guide §1: measure first, §7.3 driver-side work).
   *
   * Usage: runMain graft.tools.JobProfile q220_iceberg_subquery_dml ...
-  * Env: SF_DIR (default sf0.1), CPUS (default 32), REPS (default 2),
-  *      TOPJOBS (default 12) — slowest jobs printed with descriptions.
+  * Env: SF_DIR (default sf0.1), REPS (default 2), TOPJOBS (default
+  *      12) — slowest jobs printed with descriptions; cores per
+  *      `graft.Session`.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("CPUS", "32")
     val reps = sys.env.getOrElse("REPS", "2").toInt
     val topJobs = sys.env.getOrElse("TOPJOBS", "12").toInt
-    val spark = graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     case class JobRec(id: Int, desc: String, start: Long, var end: Long)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throwaway measurement harness: prints recall@3 and scored-pair counts
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.Tables.withTestdataConfs(SparkSession.builder()).master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     import graft.ops.Similarity
     val corpus = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), graft.functions.Vec.toDouble(col("embedding")).as("v"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** sf0.1 → sf1 scaling probe for a chosen SparkEntry query subset —
   * the companion to BASELINE.md's 24-query sf1 table, built for the
@@ -25,13 +24,7 @@ object ScaleBench {
     val qs = args(0).split(",").toSeq
     val dirs = Seq(args(1), args(2))
     val reps = args.lift(3).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     qs.foreach { q =>
       graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale the driver-generated testdata up by an integer factor — the
@@ -35,13 +35,7 @@ object ScaleTestdata {
       "usage: ScaleTestdata <srcDir> <dstDir> [factor=10]")
     val src = args(0); val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     java.nio.file.Files.createDirectories(java.nio.file.Path.of(dst))
 
     def replicate(df: DataFrame, keys: Seq[String]): DataFrame = {

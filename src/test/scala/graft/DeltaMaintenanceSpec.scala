@@ -117,6 +117,20 @@ class DeltaMaintenanceSpec extends SparkSpec {
     assert(got.toSeq == before.toSeq && got.length == 9)
   }
 
+  test("optimize refuses a deletion vector whose cardinality disagrees with its bitmap") {
+    val base = tmp()
+    DeltaInterop.overwrite(spark.range(12).toDF("id").coalesce(1), base)
+    val file = DeltaInterop.snapshot(spark, base).files.head.path
+    val v = DeltaInterop.deleteRowPositions(spark, base, file, Seq(1L, 3L, 5L))
+    // the descriptor claims 2 deleted rows; the bitmap decodes 3
+    val log = new File(base, f"_delta_log/$v%020d.json").toPath
+    val text = Files.readString(log)
+    assert(text.contains("\"cardinality\":3"))
+    Files.writeString(log, text.replace("\"cardinality\":3", "\"cardinality\":2"))
+    val e = intercept[IllegalArgumentException](DeltaInterop.optimize(spark, base))
+    assert(e.getMessage.contains("corrupt DV (refusing)"), e.getMessage)
+  }
+
   test("optimize is partition-isolated and keeps partition values") {
     val base = tmp()
     val df = spark.range(20).select(col("id"),

@@ -190,6 +190,23 @@ class GraftLogDvSpec extends SparkSpec {
     assert(net == -3)
   }
 
+  test("change feed: a copy-on-write delete after a dv delete emits only live rows") {
+    val base = freshBase("cdf_dv_then_delete")
+    val v1 = GraftLog.overwriteClustered(
+      (0L until 10L).map(k => (k, k)).toDF("k", "v"), base,
+      Seq("k"), nFiles = 1)
+    GraftLog.deleteVectored(spark, base, col("k") < 3)
+    GraftLog.delete(spark, base, col("k") >= 8)
+    val feed = GraftLog.readChangeFeed(spark, base, v1 + 1)
+      .select(col("k"), col("_change_type"), col("_commit_version"))
+      .as[(Long, String, Long)].collect().sorted.toSeq
+    // v1+1: the 3 dv-deleted rows; v1+2: the rewritten file's 7 live
+    // rows leave (never the dv-dead ones) and its 5 survivors re-enter
+    assert(feed == ((0L until 3L).map(k => (k, "delete", v1 + 1)) ++
+      (3L until 8L).map(k => (k, "insert", v1 + 2)) ++
+      (3L until 10L).map(k => (k, "delete", v1 + 2))).sorted, s"got $feed")
+  }
+
   test("vacuum keeps dv sidecars and the squashed checkpoint carries them") {
     val base = freshBase("vacuum")
     GraftLog.overwriteClustered(

@@ -180,6 +180,20 @@ class GraftLogSpec extends SparkSpec {
     assert(GraftLog.readRange(spark, base, "k", 100L, 200L).count() == 101)
   }
 
+  test("zero zone-map candidates on a schemaless log read an empty frame with the footer schema") {
+    val base = freshBase("schemaless")
+    val (staged, stats) = GraftLog.stageFilesWithStats(
+      Seq((1L, "a"), (2L, null), (3L, "c")).toDF("k", "x"), base, Seq("k"))
+    GraftLog.commit(base, "append", staged, Seq.empty, stats = stats)
+    assert(GraftLog.snapshot(base).schemaJson.isEmpty)
+    val none = GraftLog.readRange(spark, base, "k", 50L, 60L)
+    assert(none.columns.toSeq == Seq("k", "x") && none.collect().isEmpty)
+    val noNulls = GraftLog.readIsNull(spark, base, "k")
+    assert(noNulls.columns.toSeq == Seq("k", "x") && noNulls.collect().isEmpty)
+    assert(GraftLog.readRange(spark, base, "k", 2L, 3L).as[(Long, String)]
+      .collect().sortBy(_._1).toSeq == Seq((2L, null), (3L, "c")))
+  }
+
   test("schema evolution: an append with a new column widens the table; old files read null") {
     val base = freshBase("evolve")
     GraftLog.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "x"), base)

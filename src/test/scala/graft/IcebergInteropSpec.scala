@@ -333,6 +333,21 @@ class IcebergInteropSpec extends SparkSpec {
       "the re-inserted key must be the NEW row, not the deleted one")
   }
 
+  test("positionalized equality deletes follow a renamed key column") {
+    val base = tmp()
+    IcebergInterop.overwrite(
+      spark.range(10).select(col("id"), (col("id") * 10).as("v")).coalesce(1), base)
+    IcebergInterop.addEqualityDeletes(spark, base,
+      spark.range(3).select((col("id") * 3 + 1).as("id")), Seq("id"))
+    IcebergInterop.renameColumn(base, "id", "key")
+    IcebergInterop.positionalizeEqualityDeletes(spark, base)
+    val snap = IcebergInterop.snapshot(spark, base)
+    assert(snap.eqDeletes.isEmpty && snap.deletes.nonEmpty)
+    val got = IcebergInterop.read(spark, base).select("key", "v")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(got == Seq(0L, 2L, 3L, 5L, 6L, 8L, 9L).map(k => (k, k * 10)))
+  }
+
   test("multi-column equality deletes match null-safely (IS NOT DISTINCT FROM)") {
     val base = tmp()
     // tag is null for odd ids

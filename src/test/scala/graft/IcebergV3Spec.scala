@@ -186,6 +186,57 @@ class IcebergV3Spec extends SparkSpec {
       (18L, "delete", ids(2)), (19L, "delete", ids(2))), s"got $chg")
   }
 
+  test("v3 changelog across the upgrade: the vector folding v2 position deletes re-emits nothing") {
+    val base = tmp()
+    IcebergInterop.overwrite(spark.range(20).toDF("id").coalesce(1), base) // v2
+    IcebergInterop.deletePositionsWhere(spark, base, col("id") < 3) // parquet
+    IcebergInterop.upgradeFormatVersion(base, 3)
+    IcebergInterop.deletePositionsWhere(spark, base, col("id") >= 18) // folds
+    IcebergInterop.deletePositionsWhere(spark, base, col("id") === 10) // merges
+    val ids = IcebergInterop.snapshotIds(base)
+    val chg = IcebergInterop.readChangelog(spark, base, ids.head)
+      .select(col("id"), col("_change_type"), col("_snapshot_id"))
+      .as[(Long, String, Long)].collect().toSet
+    val Seq(posDel, fold, merge) = ids.takeRight(3)
+    assert(chg == Set(
+      (0L, "delete", posDel), (1L, "delete", posDel), (2L, "delete", posDel),
+      (18L, "delete", fold), (19L, "delete", fold),
+      (10L, "delete", merge)), s"got $chg")
+  }
+
+  test("v3 changelog refuses a DV whose record_count disagrees with its bitmap") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.avro.file.{DataFileReader, DataFileWriter}
+    import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
+    val base = tmp()
+    IcebergInterop.overwrite(spark.range(8).toDF("id").coalesce(1), base,
+      formatVersion = 3)
+    IcebergInterop.deletePositionsWhere(spark, base, col("id") < 3)
+    // the manifest entry claims 2 deleted rows; the vector decodes 3
+    val delMan = new File(base, "metadata").listFiles()
+      .filter(f => f.getName.startsWith("manifest-del-") &&
+        f.getName.endsWith(".avro"))
+      .maxBy(_.lastModified())
+    val rdr = new DataFileReader[GenericRecord](delMan,
+      new GenericDatumReader[GenericRecord]())
+    val sch = rdr.getSchema
+    val recs = rdr.iterator().asScala.toList
+    rdr.close()
+    recs.foreach(r => r.get("data_file").asInstanceOf[GenericRecord]
+      .put("record_count", 2L))
+    val w = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](sch))
+    w.create(sch, delMan)
+    recs.foreach(w.append)
+    w.close()
+    val ids = IcebergInterop.snapshotIds(base)
+    val e = intercept[IllegalArgumentException] {
+      IcebergInterop.readChangelog(spark, base, ids.head, Some(ids.last))
+        .collect()
+    }
+    assert(e.getMessage.contains("corrupt DV (refusing)"), e.getMessage)
+  }
+
   test("CONVERT Delta→Iceberg v3 carries the DV blob BYTE-VERBATIM") {
     import graft.sources.{DeltaDml, DeltaInterop}
     val src = tmp() + "/delta"; val dst = tmp() + "/ice3"

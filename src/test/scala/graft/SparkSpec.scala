@@ -6,16 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session keeps the
   * test run inside a single Spark context). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = graft.Tables.withTestdataConfs(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session(cores = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -123,5 +123,20 @@ class StatsEncodingSpec extends SparkSpec {
       "3" -> ("""d[-0.0..0.5 nulls=0 ndv=2] dec[- nulls=1 ndv=1] """ +
         """dt[- nulls=1 ndv=1] i[-5..-5 nulls=1 ndv=1] p[3..3 nulls=0 ndv=1] """ +
         """s["".."é" nulls=0 ndv=2] ts[- nulls=1 ndv=1]""")), got)
+    // the non-finite bounds stored as text still prune: ±Infinity are
+    // the numbers, NaN sorts above every number (Spark's double order)
+    val fileOf = snap.files.map(f =>
+      snap.fileStats(f)("p").minMax.get._1.asText() -> f).toMap
+    def pruned(lo: Double, hi: Double): Set[String] = {
+      val byRange = GraftLog.candidateFiles(base, "d", lo, hi).toSet
+      val d = org.apache.spark.sql.functions.col("d")
+      val byPredicate = GraftLog.candidateFilesFor(base, d >= lo && d <= hi).toSet
+      assert(byRange == byPredicate)
+      fileOf.collect { case (p, f) if !byRange.contains(f) => p }.toSet
+    }
+    assert(pruned(-10.0, 0.0) == Set("1"))
+    assert(pruned(3.0, 10.0) == Set("2", "3"))
+    assert(GraftLog.candidateFilesFor(base,
+      org.apache.spark.sql.functions.col("d") > 100.0) == Seq(fileOf("1")))
   }
 }
